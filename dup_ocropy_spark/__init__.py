@@ -22,9 +22,13 @@ operators/  relational recasts of the reference operators (filters, top-k,
 sources/    readers/writers (parquet now, Iceberg-ready), transcript datagen
 plans/      end-to-end pipelines: extract, lineage, resume/checkpoint
 streaming/  Structured Streaming variant of the extract pipeline
+zipcache    per-task zip re-read fix, active only in Spark Python workers
 """
 
+from dup_ocropy_spark import zipcache
 from dup_ocropy_spark.config import ExtractConfig
+
+zipcache.install()
 
 __version__ = "0.1.0"
 

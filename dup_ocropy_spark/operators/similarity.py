@@ -187,6 +187,9 @@ IVF_K = 16
 IVF_NPROBE = 3
 IVF_SAMPLE = 1024
 IVF_ITERS = 8
+# cosine-denominator floor for the cell pair stage: the product of two
+# floors (1e-300) is still a normal double, so a zero vector divides cleanly
+_NORM_FLOOR = 1e-150
 
 
 def ivf_train_centroids(emb, dim: int | None = None, k: int = IVF_K,
@@ -464,7 +467,10 @@ def _cell_pairs(assigned: DataFrame, threshold: float | None,
             return pd.DataFrame({"doc_a": [], "doc_b": [], "cos": []})
         X = np.asarray([np.asarray(v, dtype=np.float64)
                         for v in pdf["embedding"]])
-        nr = pdf["nrm"].to_numpy()
+        # floored norm: a zero vector scores cos 0 instead of 0/0 = NaN,
+        # which would sort above every real cos in the np.partition prune
+        # below and drop the cell's pairs; real norms sit far above it
+        nr = np.maximum(pdf["nrm"].to_numpy(), _NORM_FLOOR)
         cos = (X @ X.T) / np.outer(nr, nr)
         iu, ju = np.triu_indices(n, k=1)
         ids = pdf["vec_id"].to_numpy()

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 LINEAGE_SCHEMA = ("partition_file string, row_count bigint, checksum bigint, "
                   "source_snapshot string, wall_ms bigint")
@@ -25,10 +25,25 @@ def row_checksum_col(cols: tuple[str, ...] = _ID_COLS):
     return F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols])
 
 
+def count_and_checksum(df: DataFrame, cols: tuple[str, ...] = _ID_COLS) -> tuple[int, int]:
+    """Row count and order-insensitive checksum of a DataFrame in one scan.
+
+    Both aggregates ride the scan as observed metrics into the noop sink:
+    one Spark job with a single result stage, where a global ``agg`` runs
+    a partial-aggregate map job plus a result job under AQE. Result-stage
+    accumulators merge once per partition, so retried or speculative
+    tasks do not count twice.
+    """
+    obs = Observation()
+    (df.observe(obs, F.count("*").alias("n"), F.bit_xor(row_checksum_col(cols)).alias("c"))
+     .write.mode("overwrite").format("noop").save())
+    m = obs.get
+    return m["n"], m["c"] if m["c"] is not None else 0
+
+
 def dataset_checksum(df: DataFrame, cols: tuple[str, ...] = _ID_COLS) -> int:
-    """Single order-insensitive checksum over a DataFrame (test helper)."""
-    row = df.agg(F.bit_xor(row_checksum_col(cols)).alias("c")).collect()[0]
-    return row["c"] if row["c"] is not None else 0
+    """Single order-insensitive checksum over a DataFrame."""
+    return count_and_checksum(df, cols)[1]
 
 
 def lineage_for_output(spark: SparkSession, out_path: str,
@@ -46,11 +61,12 @@ def lineage_for_output(spark: SparkSession, out_path: str,
 
 def write_output_with_lineage(extracted: DataFrame, out_path: str,
                               source_snapshot: str = "dev") -> DataFrame:
-    """Write extraction output + sidecar lineage table; returns lineage."""
+    """Write extraction output + sidecar lineage table; returns the lineage
+    rows as written (reading them costs no further scan of the output)."""
     spark = extracted.sparkSession
     t0 = time.time()
     extracted.write.mode("overwrite").parquet(out_path)
     wall_ms = int((time.time() - t0) * 1000)
-    lin = lineage_for_output(spark, out_path, source_snapshot, wall_ms)
-    lin.write.mode("overwrite").parquet(out_path.rstrip("/") + "_lineage")
-    return lin
+    lin_path = out_path.rstrip("/") + "_lineage"
+    lineage_for_output(spark, out_path, source_snapshot, wall_ms).write.mode("overwrite").parquet(lin_path)
+    return spark.read.parquet(lin_path)

@@ -58,6 +58,8 @@ def main(argv: list[str]) -> int:
                          "snapshot)")
     args = ap.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from dup_ocropy_spark.config import ExtractConfig
     from dup_ocropy_spark.plans.extract import extract, ordered, reject_report
     from dup_ocropy_spark.plans.lineage import write_output_with_lineage
@@ -81,8 +83,8 @@ def main(argv: list[str]) -> int:
         n_rows = sum(e["row_count"] for e in entries)
     else:
         out = ordered(extract(transcripts, config, salted=args.salted))
-        write_output_with_lineage(out, args.output, args.snapshot)
-        n_rows = spark.read.parquet(args.output).count()
+        lin = write_output_with_lineage(out, args.output, args.snapshot)
+        n_rows = lin.agg(F.sum("row_count")).collect()[0][0] or 0
     wall = time.time() - t0
 
     n_fps = None

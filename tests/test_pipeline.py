@@ -4,14 +4,20 @@ reassembly ordering, lineage, resume (FIXTURES.md sections 1-3)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrameReader, functions as F
 
 from dup_ocropy_spark.kernels.oracle import extract_frame
+from dup_ocropy_spark.plans import resume
 from dup_ocropy_spark.plans.extract import conversation_text, extract, ordered, reject_report
 from dup_ocropy_spark.plans.lineage import dataset_checksum, write_output_with_lineage
-from dup_ocropy_spark.plans.resume import committed_buckets, read_checkpointed, run_with_checkpoints
+from dup_ocropy_spark.plans.resume import (
+    bucket_col, committed_buckets, read_checkpointed, run_with_checkpoints,
+)
 from dup_ocropy_spark.sources.transcripts import (
     synth_expected, synth_transcripts, write_transcripts,
 )
@@ -132,6 +138,59 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
     assert dataset_checksum(resumed) == dataset_checksum(direct)
     # re-running a completed checkpoint is a no-op
     assert run_with_checkpoints(transcripts, out_dir, n_buckets=4) == []
+
+
+def _manifests(out_dir: str) -> dict[int, dict]:
+    mdir = os.path.join(out_dir, "_manifest")
+    out = {}
+    for f in os.listdir(mdir):
+        with open(os.path.join(mdir, f)) as fh:
+            m = json.load(fh)
+        out[m["bucket"]] = m
+    return out
+
+
+def test_resume_manifests_match_committed_buckets(spark, transcripts, tmp_path):
+    """After a crash and a restart, each manifest's row count and checksum
+    are those of its bucket as read_checkpointed reads it back."""
+    out_dir = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_checkpoints(transcripts, out_dir, n_buckets=4, fail_after_bucket=1)
+    run_with_checkpoints(transcripts, out_dir, n_buckets=4)
+    manifests = _manifests(out_dir)
+    assert set(manifests) == set(range(4))
+    back = read_checkpointed(spark, out_dir)
+    for b, m in manifests.items():
+        part = back.where(bucket_col(4) == b)
+        assert m["row_count"] == part.count() > 0
+        assert m["checksum"] == dataset_checksum(part)
+
+
+def test_resume_reads_each_bucket_back_in_one_job(spark, transcripts, tmp_path, monkeypatch):
+    """Every Spark job from the start of a bucket's read-back to the next
+    bucket's extraction falls in that bucket's job group: one per bucket."""
+    sc = spark.sparkContext
+    groups: list[str] = []
+    real_extract, real_parquet = resume.extract, DataFrameReader.parquet
+
+    def extract_in_group(*a, **kw):
+        sc.setJobGroup(f"write-{tmp_path.name}", "bucket write")
+        return real_extract(*a, **kw)
+
+    def parquet_in_group(self, *paths, **kw):
+        groups.append(f"readback-{tmp_path.name}-{len(groups)}")
+        sc.setJobGroup(groups[-1], "bucket read-back")
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(resume, "extract", extract_in_group)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet_in_group)
+    try:
+        run_with_checkpoints(transcripts, str(tmp_path / "ckpt"), n_buckets=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(groups) == 3
+    tracker = sc.statusTracker()
+    assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [1, 1, 1]
 
 
 def test_write_transcripts_scrambled_then_reordered(spark, tmp_path):

@@ -323,3 +323,30 @@ def test_ivf_distributed_training_past_sample_cap(spark, tmp_path_factory):
 
     with _pytest.raises(ValueError, match="exceeds corpus size"):
         ivf_train_centroids(emb, k=n + 10, sample=32)
+
+
+def test_cell_pairs_zero_norm_vector_keeps_the_cell(spark):
+    """A zero vector scores cos 0 against everything; its pairs must not
+    turn into NaN, which the per-cell top-k prune would rank above every
+    real pair and so drop the whole cell."""
+    from dup_ocropy_spark.operators.similarity import _cell_pairs
+
+    rng = np.random.default_rng(SEED)
+    X = rng.standard_normal((6, 8))
+    X[1] = X[0] + 0.01 * rng.standard_normal(8)  # the planted near-dup
+    X[5] = 0.0
+    pdf = pd.DataFrame({
+        "vec_id": np.arange(6, dtype=np.int64),
+        "embedding": [list(map(float, r)) for r in X.astype(np.float32)],
+        "nrm": np.sqrt((X.astype(np.float32).astype(np.float64) ** 2).sum(axis=1)),
+        "cell": np.zeros(6, dtype=np.int32),
+    })
+    assigned = spark.createDataFrame(
+        pdf, "vec_id bigint, embedding array<float>, nrm double, cell int")
+    got = _cell_pairs(assigned, threshold=None, local_top=2).toPandas()
+    pairs = {(r.doc_a, r.doc_b): r.cos for r in got.itertuples(index=False)}
+    assert pairs[(0, 1)] > 0.99
+    assert not got["cos"].isna().any()
+    everything = _cell_pairs(assigned, threshold=None).toPandas()
+    zero = everything[(everything["doc_a"] == 5) | (everything["doc_b"] == 5)]
+    assert len(zero) == 5 and (zero["cos"] == 0.0).all()
