@@ -13,7 +13,10 @@ layout text) and the analog structures are:
   * speckle removal (P5)    -> blocks shorter than ``noise_min_chars`` are
     labeled ``noise`` downstream (``ocrolib/common.py:861-869``)
   * mask join (G8/J5)       -> ``forced_boundaries`` offsets split blocks
-    (``ocropus-gpageseg:268-276``)
+    (``ocropus-gpageseg:268-276``). As in the reference, the join is
+    applied inside the one segmentation pass: the offsets are sorted and
+    walked by a cursor in the same tokenizer loop that serves unmasked
+    payloads (an int sentinel stands in when there are none)
   * reading order (O1/O3)   -> blocks sorted by payload position, ids
     densified 0..n-1 (``psegutils.py:127-164``, ``morph.py:229-246``)
 
@@ -30,6 +33,7 @@ from __future__ import annotations
 import html as _html
 import re
 from dataclasses import dataclass
+from itertools import chain
 
 
 # Tags that terminate the current block (line-separator analogs).
@@ -68,7 +72,7 @@ _PLAIN_SEP_RE = re.compile(PLAIN_SEP_PATTERN, re.M)
 # also exported for the oracle twins (post-segmentation rule-block drop)
 RULE_BLOCK_PATTERN = r"^[-=_* \t]*[-=_*]{4,}[-=_* \t]*$"
 _RULE_LINE_RE = re.compile(RULE_BLOCK_PATTERN)
-# allocation-free fast-path guard for _add_piece: piece could start a rule line
+# allocation-free guard: a text piece could start a rule line
 _LEAD_RULE_RE = re.compile(r"[ \t]*[-=_*]")
 
 
@@ -106,119 +110,38 @@ def _trim_extent(payload: str, start: int, end: int) -> tuple[int, int]:
     return start, end
 
 
-class _Assembler:
-    """Accumulates visible-text segments into blocks, flushing at
-    structural boundaries (the seed-propagation analog: every visible run
-    between two separators becomes one labeled region)."""
-
-    def __init__(self, payload: str, forced: list[int] | None):
-        self.payload = payload
-        self.forced = sorted(set(forced or []))
-        self._last_end = 0  # end of the previous text slice (gap tracking)
-        self.blocks: list[Block] = []
-        # pending segments: (start, end, decoded_text, link_chars, boiler)
-        self.segs: list[tuple[int, int, str, int, bool]] = []
-        self.kind = "text"
-
-    def flush(self) -> None:
-        segs = self.segs
-        if not segs:
-            return
-        if len(segs) == 1:  # fast path: most inter-separator runs are one piece
-            s, e, visible, link_chars, boiler = segs[0]
-        else:
-            s = segs[0][0]
-            e = segs[-1][1]
-            visible = "".join(t for _, _, t, _, _ in segs)
-            link_chars = sum(lc for _, _, _, lc, _ in segs)
-            boiler = any(bo for _, _, _, _, bo in segs)
-        kind = self.kind
-        self.segs = []
-        if not visible.strip():
-            return
-        s, e = _trim_extent(self.payload, s, e)
-        self.blocks.append(
-            Block(start=s, end=e, visible=visible, kind=kind,
-                  link_chars=link_chars, boiler=boiler)
-        )
-
-    def add_text(self, s: int, e: int, in_link: bool, boiler: bool, kind: str) -> None:
-        """Add raw payload slice [s, e); splits at plain separators and
-        forced boundaries, flushing between pieces."""
-        if s >= e:
-            return
-        if self.forced:
-            # a boundary at the slice start OR inside the preceding tag
-            # markup gap (last_end < p <= s) must still split: the
-            # pending text accumulated from earlier slices flushes
-            # before this slice begins — the strict interior filter
-            # below cannot see boundaries that fall between slices
-            if self.segs and any(self._last_end <= p <= s
-                                 for p in self.forced):
-                self.flush()
-            # forced boundary offsets inside this slice (mask-join analog)
-            bounds = [s] + [p for p in self.forced if s < p < e] + [e]
-            for i in range(len(bounds) - 1):
-                if i > 0:
-                    self.flush()
-                self._add_piece(bounds[i], bounds[i + 1], in_link, boiler, kind)
-        else:
-            self._add_piece(s, e, in_link, boiler, kind)
-        self._last_end = e
-
-    def _add_piece(self, s: int, e: int, in_link: bool, boiler: bool, kind: str) -> None:
-        text = self.payload[s:e]
-        # fast path: every separator needs \n, \f, or a whole-piece rule
-        # line (^...$ matches piece edges); most inter-tag runs have none
-        if ("\n" in text or "\f" in text
-                or _LEAD_RULE_RE.match(text) is not None):
-            last = 0
-            for mm in _PLAIN_SEP_RE.finditer(text):
-                self._emit(s + last, s + mm.start(), text[last:mm.start()],
-                           in_link, boiler, kind)
-                self.flush()
-                last = mm.end()
-            self._emit(s + last, e, text[last:], in_link, boiler, kind)
-        else:
-            self._emit(s, e, text, in_link, boiler, kind)
-
-    def _emit(self, s: int, e: int, text: str, in_link: bool, boiler: bool, kind: str) -> None:
-        if not text:
-            return
-        decoded = _html.unescape(text) if "&" in text else text
-        lc = len(decoded) if in_link else 0
-        if not self.segs:
-            self.kind = kind
-        self.segs.append((s, e, decoded, lc, boiler))
-
-    def finish(self) -> list[Block]:
-        self.flush()
-        return self.blocks
+# cursor sentinel past every payload offset: an int, so the unmasked
+# case pays plain int compares per text run
+_NO_BOUNDARY = 1 << 62
+# zero-width match at the payload end with _TAG_RE's four groups (none
+# participate): closes the trailing text run through the tag-loop body
+_END_RE = re.compile(r"\Z(/)?(/)?(/)?(/)?")
 
 
-def _segment_html_fast(payload: str) -> list[Block]:
-    """No-forced-boundaries specialization of ``_segment_html``: the
-    assembler's per-slice method chain (add_text -> _add_piece -> _emit ->
-    flush) is inlined into one loop body — identical block output (the
-    parity test in test_kernels sweeps both paths over the adversarial
-    corpus), ~35%% less per-payload wall. The general path below stays the
-    single source of truth for the forced/mask join."""
+def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
+    """Tokenize markup into blocks. Visible text runs between tags
+    accumulate into the pending block; block-level tags, plain separators
+    inside a run and forced boundaries flush it (the seed-propagation
+    analog: every visible run between two separators is one region)."""
+    n = len(payload)
+    bounds = sorted(set(forced)) + [_NO_BOUNDARY] if forced else [_NO_BOUNDARY]
+    bi = 0
+    nxt = bounds[0]           # next forced boundary not yet applied
     blocks: list[Block] = []
+    # pending pieces: (start, end, decoded_text, link_chars, boiler)
     segs: list[tuple[int, int, str, int, bool]] = []
     seg_kind = "text"
     pos = 0
     a_depth = 0
-    raw_until: str | None = None
+    raw_until: str | None = None  # inside <script>/<style>
     kind = "text"
     boiler_stack: list[str] = []
     unescape = _html.unescape
-    finditer = _TAG_RE.finditer
     lead_rule_match = _LEAD_RULE_RE.match
     sep_finditer = _PLAIN_SEP_RE.finditer
 
     def flush() -> None:
-        # identical to _Assembler.flush
-        if len(segs) == 1:
+        if len(segs) == 1:  # most inter-separator runs are one piece
             s, e, visible, link_chars, boiler = segs[0]
         else:
             s = segs[0][0]
@@ -233,10 +156,12 @@ def _segment_html_fast(payload: str) -> list[Block]:
         blocks.append(Block(start=s, end=e, visible=visible, kind=seg_kind,
                             link_chars=link_chars, boiler=boiler))
 
-    for m in finditer(payload):
+    for m in chain(_TAG_RE.finditer(payload), (_END_RE.match(payload, n),)):
         closing_s, name, attrs_s, selfclose_s = m.groups()
         mstart, mend = m.span()
-        if raw_until is not None:
+        if raw_until is not None and mstart < n:
+            # inside a raw-text element: only the matching close tag ends
+            # it (an unclosed one still yields its trailing text)
             if closing_s == "/" and (name or "").lower() == raw_until:
                 if raw_until in boiler_stack:
                     boiler_stack.remove(raw_until)
@@ -244,180 +169,81 @@ def _segment_html_fast(payload: str) -> list[Block]:
             pos = mend
             continue
         if mstart > pos:
-            text = payload[pos:mstart]
+            # mask join: a forced boundary at the run start or anywhere in
+            # the markup gap since the previous run flushes the pending block
+            if nxt <= pos:
+                if segs:
+                    flush()
+                while nxt <= pos:
+                    bi += 1
+                    nxt = bounds[bi]
             in_link = a_depth > 0
             boiler = bool(boiler_stack)
-            if "\n" in text or "\f" in text or (
-                    text[0] in "-=_* \t"
-                    and lead_rule_match(text) is not None):
-                # separator-splitting path (_add_piece slow branch);
-                # first-char guard: _LEAD_RULE_RE is [ \t]*[-=_*] anchored
-                # at the start, so it can only match when the run opens
-                # with rule/space chars — skips the regex for the common
+            while True:
+                # interior forced boundaries cut the run into pieces; each
+                # piece is separator-split as its own string (^/$ of
+                # PLAIN_SEP_PATTERN anchor at piece edges)
+                e = nxt if nxt < mstart else mstart
+                text = payload[pos:e]
+                # every separator needs \n, \f or a whole-piece rule line;
+                # the first-char guard skips the regex for the common
                 # letter-initial run
-                last = 0
-                for mm in sep_finditer(text):
-                    piece = text[last:mm.start()]
-                    if piece:
-                        decoded = unescape(piece) if "&" in piece else piece
-                        if not segs:
-                            seg_kind = kind
-                        segs.append((pos + last, pos + mm.start(), decoded,
-                                     len(decoded) if in_link else 0, boiler))
-                    if segs:
-                        flush()
-                    last = mm.end()
-                piece = text[last:]
-                if piece:
-                    decoded = unescape(piece) if "&" in piece else piece
+                if "\n" in text or "\f" in text or (
+                        text[0] in "-=_* \t"
+                        and lead_rule_match(text) is not None):
+                    last = 0
+                    for mm in sep_finditer(text):
+                        ms = mm.start()
+                        if ms > last:
+                            piece = text[last:ms]
+                            decoded = unescape(piece) if "&" in piece else piece
+                            if not segs:
+                                seg_kind = kind
+                            segs.append((pos + last, pos + ms, decoded,
+                                         len(decoded) if in_link else 0, boiler))
+                        if segs:
+                            flush()
+                        last = mm.end()
+                    text = text[last:]  # the tail after the last separator
+                    pos += last
+                if text:
+                    decoded = unescape(text) if "&" in text else text
                     if not segs:
                         seg_kind = kind
-                    segs.append((pos + last, mstart, decoded,
+                    segs.append((pos, e, decoded,
                                  len(decoded) if in_link else 0, boiler))
-            else:
-                decoded = unescape(text) if "&" in text else text
-                if not segs:
-                    seg_kind = kind
-                segs.append((pos, mstart, decoded,
-                             len(decoded) if in_link else 0, boiler))
+                if e == mstart:
+                    break
+                if segs:
+                    flush()
+                pos = e
+                bi += 1
+                nxt = bounds[bi]
         if name:
             name = name.lower()
             closing = closing_s == "/"
-            a = attrs_s or ""
-            selfclose = selfclose_s == "/" or (
-                a.endswith("/")
-                and (len(a) == 1 or a[-2] in "\"' \t\n\r\f"))
-            if name == "a" and not selfclose:
-                a_depth = a_depth + 1 if not closing else max(0, a_depth - 1)
             if name in BLOCK_TAGS:
                 if segs:
                     flush()
                 kind = name if not closing else "text"
-                seg_kind = kind
-            if name in BOILER_CONTAINERS:
-                if closing:
-                    for k in range(len(boiler_stack) - 1, -1, -1):
-                        if boiler_stack[k] == name:
-                            del boiler_stack[k:]
-                            break
-                elif not selfclose:
-                    boiler_stack.append(name)
-                    if name in RAW_TEXT_TAGS:
-                        raw_until = name
-        pos = mend
-    if pos < len(payload):
-        text = payload[pos:]
-        in_link = a_depth > 0
-        boiler = bool(boiler_stack)
-        if "\n" in text or "\f" in text or (
-                text[0] in "-=_* \t"
-                and lead_rule_match(text) is not None):
-            last = 0
-            for mm in sep_finditer(text):
-                piece = text[last:mm.start()]
-                if piece:
-                    decoded = unescape(piece) if "&" in piece else piece
-                    if not segs:
-                        seg_kind = kind
-                    segs.append((pos + last, pos + mm.start(), decoded,
-                                 len(decoded) if in_link else 0, boiler))
-                if segs:
-                    flush()
-                last = mm.end()
-            piece = text[last:]
-            if piece:
-                decoded = unescape(piece) if "&" in piece else piece
-                if not segs:
-                    seg_kind = kind
-                segs.append((pos + last, len(payload), decoded,
-                             len(decoded) if in_link else 0, boiler))
-        else:
-            decoded = unescape(text) if "&" in text else text
-            if not segs:
-                seg_kind = kind
-            segs.append((pos, len(payload), decoded,
-                         len(decoded) if in_link else 0, boiler))
-    if segs:
-        flush()
-    return blocks
-
-
-def _segment_plain_fast(payload: str) -> list[Block]:
-    """No-forced-boundaries specialization of ``_segment_plain`` (same
-    inlining rationale as ``_segment_html_fast``)."""
-    blocks: list[Block] = []
-    n = len(payload)
-    if "\n" in payload or "\f" in payload \
-            or _LEAD_RULE_RE.match(payload) is not None:
-        pieces: list[tuple[int, int]] = []
-        last = 0
-        for mm in _PLAIN_SEP_RE.finditer(payload):
-            pieces.append((last, mm.start()))
-            last = mm.end()
-        pieces.append((last, n))
-    else:
-        pieces = [(0, n)]
-    unescape = _html.unescape
-    for s, e in pieces:
-        if s >= e:
-            continue
-        text = payload[s:e]
-        decoded = unescape(text) if "&" in text else text
-        if not decoded.strip():
-            continue
-        ts, te = _trim_extent(payload, s, e)
-        blocks.append(Block(start=ts, end=te, visible=decoded, kind="text"))
-    return blocks
-
-
-def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
-    if not forced:
-        return _segment_html_fast(payload)
-    asm = _Assembler(payload, forced)
-    pos = 0
-    a_depth = 0
-    raw_until: str | None = None  # inside <script>/<style>
-    kind = "text"
-    boiler_stack: list[str] = []
-
-    for m in _TAG_RE.finditer(payload):
-        closing_s, name, attrs_s, selfclose_s = m.group(1, 2, 3, 4)
-        if raw_until is not None:
-            # inside a raw-text element: only the matching close tag ends it
-            if closing_s == "/" and (name or "").lower() == raw_until:
-                if raw_until in boiler_stack:
-                    boiler_stack.remove(raw_until)
-                raw_until = None
-            pos = m.end()
-            continue
-        if m.start() > pos:
-            asm.add_text(pos, m.start(), a_depth > 0, bool(boiler_stack), kind)
-        if name:
-            name = name.lower()
-            closing = closing_s == "/"
-            # the greedy attribute group consumes a trailing '/' when
-            # attributes are present ('<a href="#"/>' -> attrs ' href="#"/',
-            # group 4 empty), so self-close must also look at the attr
-            # tail. HTML5 nuance: a '/' ending an UNQUOTED value
-            # ('<a href=http://x.com/>') is part of the value, NOT a
-            # self-close — so the trailing '/' only counts when it is the
-            # whole attr string or follows a quote or whitespace
-            a = attrs_s or ""
-            selfclose = selfclose_s == "/" or (
-                a.endswith("/")
-                and (len(a) == 1 or a[-2] in "\"' \t\n\r\f"))
-            if name == "a" and not selfclose:
-                # a self-closing <a/> has no content: counting it open
-                # would mark ALL subsequent text as link chars (density
-                # 1.0 -> everything boilerplate) with no close to undo it
-                a_depth = a_depth + 1 if not closing else max(0, a_depth - 1)
-            if name in BLOCK_TAGS:
-                if asm.segs:  # skip the call for adjacent block tags
-                    asm.flush()
-                kind = name if not closing else "text"
-                asm.kind = kind
-            if name in BOILER_CONTAINERS:
-                if closing:
+            if name == "a" or name in BOILER_CONTAINERS:
+                # the greedy attribute group consumes a trailing '/' when
+                # attributes are present ('<a href="#"/>' -> attrs ' href="#"/',
+                # group 4 empty), so self-close must also look at the attr
+                # tail. HTML5 nuance: a '/' ending an UNQUOTED value
+                # ('<a href=http://x.com/>') is part of the value, NOT a
+                # self-close — so the trailing '/' only counts when it is
+                # the whole attr string or follows a quote or whitespace
+                selfclose = selfclose_s == "/" or (
+                    attrs_s.endswith("/")
+                    and (len(attrs_s) == 1 or attrs_s[-2] in "\"' \t\n\r\f"))
+                if name == "a":
+                    # a self-closing <a/> has no content: counting it open
+                    # would mark ALL subsequent text as link chars (density
+                    # 1.0 -> everything boilerplate) with no close to undo it
+                    if not selfclose:
+                        a_depth = a_depth + 1 if not closing else max(0, a_depth - 1)
+                elif closing:
                     # pop the innermost matching open (tolerates bad nesting)
                     for k in range(len(boiler_stack) - 1, -1, -1):
                         if boiler_stack[k] == name:
@@ -427,18 +253,36 @@ def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
                     boiler_stack.append(name)
                     if name in RAW_TEXT_TAGS:
                         raw_until = name
-        pos = m.end()
-    if pos < len(payload):
-        asm.add_text(pos, len(payload), a_depth > 0, bool(boiler_stack), kind)
-    return asm.finish()
+        pos = mend
+    if segs:
+        flush()
+    return blocks
 
 
 def _segment_plain(payload: str, forced: list[int] | None) -> list[Block]:
-    if not forced:
-        return _segment_plain_fast(payload)
-    asm = _Assembler(payload, forced)
-    asm.add_text(0, len(payload), in_link=False, boiler=False, kind="text")
-    return asm.finish()
+    """Split layout text at forced boundaries, then each piece (as its own
+    string) at plain separators; every resulting run is one block."""
+    n = len(payload)
+    cuts = [0, *sorted({p for p in forced if 0 < p < n}), n] if forced else [0, n]
+    blocks: list[Block] = []
+    unescape = _html.unescape
+    for s, e in zip(cuts, cuts[1:]):
+        text = payload[s:e]
+        runs = []
+        last = 0
+        if "\n" in text or "\f" in text \
+                or _LEAD_RULE_RE.match(text) is not None:
+            for mm in _PLAIN_SEP_RE.finditer(text):
+                runs.append((s + last, s + mm.start()))
+                last = mm.end()
+        runs.append((s + last, e))
+        for a, b in runs:
+            piece = payload[a:b]
+            decoded = unescape(piece) if "&" in piece else piece
+            if decoded.strip():
+                a, b = _trim_extent(payload, a, b)
+                blocks.append(Block(start=a, end=b, visible=decoded))
+    return blocks
 
 
 def segment_payload(payload: str, forced_boundaries: list[int] | None = None) -> list[Block]:

@@ -1,5 +1,6 @@
 """Relational recasts of the reference operators + training-data-pipeline
-operators (dedup, similarity, text stats, multimodal plumbing).
+operators (dedup, similarity, text stats, quality, redaction, sampling,
+decontamination, packing, codec training).
 
 Every SQL-expressible operator registers a (spark_builder, duckdb_sql)
 pair in ``registry.REGISTRY``; ``__spark_entry__.py`` exposes them to the

@@ -55,6 +55,12 @@ def corpus_word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # at sf1.0). A real 10^8-distinct-word corpus stays on the distributed
 # rounds, whose O(rounds/K) wall the r5 series pinned.
 BPE_DRIVER_VOCAB_MAX = 65_536
+# ... and the byte bound on the same collect: a few whitespace-free
+# "words" (base64 blobs, minified code) fit the row cap yet are MBs each,
+# and the driver kernel holds one Python str per symbol. 4M chars is the
+# row cap's "few MB" at 64 chars/word; natural-language vocabularies
+# (~10 chars/word) stay far under it.
+BPE_DRIVER_MAX_CHARS = 1 << 22
 
 
 def train_bpe(docs: DataFrame, n_merges: int = 64,
@@ -72,14 +78,18 @@ def train_bpe(docs: DataFrame, n_merges: int = 64,
     same (corpus, n_merges, batch); ``batch=1`` reproduces the sequential
     ``bpe.bpe_merges`` exactly (both test-pinned).
 
-    When the distinct-word table fits ``driver_vocab_max`` (bounded
-    collect), the rounds run through ``bpe.bpe_merges_batched`` directly —
-    the SAME merges by the pinned equality contract, with zero per-round
+    When the distinct-word table fits ``driver_vocab_max`` rows and
+    ``BPE_DRIVER_MAX_CHARS`` characters (a bounded collect; one
+    aggregation measures both), the rounds run through
+    ``bpe.bpe_merges_batched`` directly — the SAME merges by the pinned equality contract, with zero per-round
     scheduler latency; pass ``driver_vocab_max=0`` to force the
     distributed rounds (tests do, so both paths stay covered)."""
     wc = corpus_word_counts(docs, text_col).persist()
-    n_words = wc.count()
-    if n_words <= driver_vocab_max:
+    size = wc.agg(F.count("*").alias("words"),
+                  F.sum(F.length("word")).alias("chars")).collect()[0]
+    n_words = size["words"]
+    if (n_words <= driver_vocab_max
+            and (size["chars"] or 0) <= BPE_DRIVER_MAX_CHARS):
         rows = wc.collect()
         wc.unpersist()
         return bpe.bpe_merges_batched(

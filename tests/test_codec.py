@@ -157,3 +157,24 @@ def test_driver_vocab_path_equals_distributed_rounds(spark):
         via_rounds = train_bpe(docs, n_merges=24, batch=k, driver_vocab_max=0)
         assert via_driver == via_rounds == bpe.bpe_merges_batched(
             bpe.word_counts(CORPUS), 24, k=k), f"batch={k}"
+
+
+def test_multi_mb_words_take_the_distributed_rounds(spark, monkeypatch):
+    """A few whitespace-free multi-MB "words" fit the row cap but not the
+    character cap, so the merge rounds stay distributed — with the same
+    merges as the kernel."""
+    from dup_ocropy_spark.operators import codec
+
+    blobs = [("abcab" * 440_000) + "x", ("bcaab" * 440_000) + "y",
+             ("cabba" * 440_000) + "z"]
+    texts = [b + " low lower lowest" for b in blobs] + CORPUS
+    assert sum(map(len, blobs)) > codec.BPE_DRIVER_MAX_CHARS
+    want = bpe.bpe_merges_batched(bpe.word_counts(texts), 4, k=2)
+
+    def no_driver_path(*a, **kw):
+        raise AssertionError("merge rounds ran on the driver")
+
+    monkeypatch.setattr(bpe, "bpe_merges_batched", no_driver_path)
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    assert codec.train_bpe(docs, n_merges=4, batch=2) == want

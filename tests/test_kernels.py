@@ -4,6 +4,9 @@ edge fixtures from FIXTURES.md section 3/4. No Spark involved."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from dup_ocropy_spark.config import ExtractConfig
@@ -271,16 +274,20 @@ def test_forced_boundary_at_slice_start_still_splits():
     assert [(b.visible) for b in blocks] == ["abcdef", "ghijkl"]
 
 
-def test_segment_fast_path_matches_assembler_path():
-    """r6 optimization guard: the inlined no-forced fast path
-    (_segment_html_fast/_segment_plain_fast) must produce byte-identical
-    blocks to the general assembler path. forced_boundaries=[0] is a
-    proven no-op boundary (interior filter drops it; the pre-flush guard
-    needs a non-empty pending run, impossible while _last_end==0), so it
-    routes the SAME payload through the assembler for comparison."""
+# ------------------------------------------------- segmentation golden snapshot
+
+_SEGMENT_GOLDEN = Path(__file__).parent / "data" / "segment_golden.json"
+_GOLDEN_CHUNK = 200  # segmentations per digest
+
+
+def _segment_golden_runs():
+    """(payload, forced_boundaries) pairs of the golden corpus: hand cases,
+    a seeded token fuzz and the special-chars fixture payloads, each under
+    no boundaries, ``[0]`` and three seeded random boundary sets drawn
+    from ``[-2, len + 2]``, plus explicit mask-join edge cases."""
     import random
 
-    from dup_ocropy_spark.kernels.segment import segment_payload
+    from tests.test_parity_special_chars import MULTIBLOCK_TEXTS, SPECIAL_TEXTS
 
     cases = [
         "", " ", "\n\n\n", "hello", "a<b>c</b>d", "<p>x</p><p>y</p>",
@@ -307,11 +314,61 @@ def test_segment_fast_path_matches_assembler_path():
             "<option>", "</option>", "<td>x</td>"]
     for _ in range(1000):
         cases.append("".join(rng.choice(toks) for _ in range(rng.randint(1, 25))))
+    cases += SPECIAL_TEXTS + MULTIBLOCK_TEXTS
 
-    def key(blocks):
-        return [(b.start, b.end, b.visible, b.kind, b.link_chars,
-                 b.boiler, b.block_id) for b in blocks]
-
+    brng = random.Random(11)
     for p in cases:
-        assert key(segment_payload(p)) == \
-            key(segment_payload(p, forced_boundaries=[0])), repr(p[:120])
+        yield p, None
+        yield p, [0]
+        for _ in range(3):
+            yield p, [brng.randint(-2, len(p) + 2)
+                      for _ in range(brng.randint(1, 4))]
+    script = "lead words<script>var s = '<p>';</script>tail words"
+    tag = "abc<b class='x'>def</b>ghi<!-- note -->jkl"
+    blank = "para one\n\npara two\n \n\npara three"
+    yield script, [script.index("var") + 4]          # inside raw text
+    yield script + "<script>open", [len(script) + 10]  # unclosed raw text
+    yield tag, [5]                                     # inside a tag
+    yield tag, [tag.index("note")]                     # inside a comment
+    yield tag, [3, 16]                                 # at tag edges
+    yield blank, [blank.index("\n") + 1]              # between the two \n
+    yield blank, [blank.index("\n \n") + 2]
+    yield blank, [20, 5, 20, 9, 5]                     # unsorted, duplicate
+    yield tag, [-5, -1, 0, len(tag), len(tag) + 7]     # out of range
+    yield "abcdef<b>ghijkl</b>", [9, 9, 3]
+
+
+def _segment_golden_digests() -> list[str]:
+    import hashlib
+
+    digests = []
+    h = hashlib.sha256()
+    for i, (p, forced) in enumerate(_segment_golden_runs(), 1):
+        blocks = segment_payload(p, forced_boundaries=forced)
+        h.update(repr([(int(b.start), int(b.end), b.visible, b.kind,
+                        b.link_chars, b.boiler, b.block_id)
+                       for b in blocks]).encode())
+        if i % _GOLDEN_CHUNK == 0:
+            digests.append(h.hexdigest())
+            h = hashlib.sha256()
+    digests.append(h.hexdigest())
+    return digests
+
+
+def test_segment_matches_golden_snapshot():
+    """Blocks (extent, visible text, kind, link chars, boiler flag, id)
+    match the snapshot taken before the unmasked and masked segmentation
+    paths were folded into one loop. Regenerate only for an intended
+    change: ``python -m tests.test_kernels > tests/data/segment_golden.json``."""
+    want = json.loads(_SEGMENT_GOLDEN.read_text())
+    got = _segment_golden_digests()
+    assert len(got) == len(want["digests"])
+    bad = [i for i, (g, w) in enumerate(zip(got, want["digests"])) if g != w]
+    assert not bad, (f"segmentation changed in golden chunks {bad} "
+                     f"(runs [{bad[0] * _GOLDEN_CHUNK}, "
+                     f"{(bad[0] + 1) * _GOLDEN_CHUNK}))")
+
+
+if __name__ == "__main__":
+    print(json.dumps({"chunk": _GOLDEN_CHUNK,
+                      "digests": _segment_golden_digests()}, indent=1))

@@ -1,5 +1,5 @@
-"""Model artifact round-trip (S7), gt prep kernels (T5), and the
-bidirectional-context classifier (L6 analog)."""
+"""Model artifact round-trip (S7) and the bidirectional-context
+classifier (L6 analog)."""
 
 from __future__ import annotations
 
@@ -11,22 +11,11 @@ from dup_ocropy_spark.kernels.classify import (
     CTX_FEATURE_NAMES, CTX_WEIGHTS, FEATURE_NAMES, block_features,
     context_features, logistic_scores,
 )
-from dup_ocropy_spark.kernels.gtprep import gt_explode, gt_implode
 from dup_ocropy_spark.kernels.segment import segment_payload
 from dup_ocropy_spark.operators.train import train_classifier
 from dup_ocropy_spark.plans.extract import extract
 from dup_ocropy_spark.sources.models import config_with_model, load_model, save_model
 from dup_ocropy_spark.sources.transcripts import synth_transcripts
-
-
-def test_gt_explode_implode():
-    assert gt_explode("abc") == ["a", "b", "c"]
-    assert gt_explode("a_fl_c") == ["a", "fl", "c"]
-    assert gt_explode("_ffi_x_oe_") == ["ffi", "x", "oe"]
-    assert gt_implode(["a", "fl", "c"]) == "a_fl_c"
-    assert gt_implode(gt_explode("a_fl_c")) == "a_fl_c"
-    # unmatched underscore survives
-    assert gt_explode("a_b") == ["a", "_", "b"]
 
 
 def test_context_features_shape_and_edges():

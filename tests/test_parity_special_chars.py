@@ -38,31 +38,35 @@ QUERIES = (
 )
 
 
+# the homograph corpus (also part of the segmentation golden corpus)
+_TEXTS = [
+    'He said "hello there" and left the room quietly after that.',
+    "A `quoted` word and a 5µm gap measured with great care here.",
+    'Mixed "double" and `single` quotes &amp; an entity in one doc.',
+    "Plain control text with no special characters at all in it today.",
+    'Trailing quote at the very end of this document right here: "',
+    "The ﬂat ﬁle has ligatures — an em dash – an en dash and “curly quotes”.",
+    "Ellipsis… prime 5′ double ″ and ‘single curls’ all in one line here.",
+]
+SPECIAL_TEXTS = [t + " Padding words so the payload clears the minimum gate. " * 2
+                 for t in _TEXTS]
+# UNPADDED edge rows (the padding would defeat them):
+# raw length >= 20 but DECODED visible < noise_min_chars=8 — the
+# noise cut must apply to entity-decoded text (kernel semantics), not
+# the raw payload; and tab/newline edges exercise the whitespace-SET
+# trim in the span/visible twins (bare DuckDB trim strips spaces only)
+SPECIAL_TEXTS.append("&amp;&amp;&amp;&amp;&amp;12")
+SPECIAL_TEXTS.append("\t\n  edge whitespace body words here padded well  \t\n")
+# rule-line-only payloads: every line is a G7 separator, so the
+# kernel segments ZERO blocks — the former constant-n_blocks oracles
+# mispredicted these (round-4 fix; mixed rule runs + blank line too)
+SPECIAL_TEXTS.append("=" * 24)
+SPECIAL_TEXTS.append("  ==== ----  \n\n====____")
+
+
 @pytest.fixture(scope="module")
 def special_dir(tmp_path_factory):
-    texts = [
-        'He said "hello there" and left the room quietly after that.',
-        "A `quoted` word and a 5µm gap measured with great care here.",
-        'Mixed "double" and `single` quotes &amp; an entity in one doc.',
-        "Plain control text with no special characters at all in it today.",
-        'Trailing quote at the very end of this document right here: "',
-        "The ﬂat ﬁle has ligatures — an em dash – an en dash and “curly quotes”.",
-        "Ellipsis… prime 5′ double ″ and ‘single curls’ all in one line here.",
-    ]
-    padded = [t + " Padding words so the payload clears the minimum gate. " * 2
-              for t in texts]
-    # UNPADDED edge rows (the padding would defeat them):
-    # raw length >= 20 but DECODED visible < noise_min_chars=8 — the
-    # noise cut must apply to entity-decoded text (kernel semantics), not
-    # the raw payload; and tab/newline edges exercise the whitespace-SET
-    # trim in the span/visible twins (bare DuckDB trim strips spaces only)
-    padded.append("&amp;&amp;&amp;&amp;&amp;12")
-    padded.append("\t\n  edge whitespace body words here padded well  \t\n")
-    # rule-line-only payloads: every line is a G7 separator, so the
-    # kernel segments ZERO blocks — the former constant-n_blocks oracles
-    # mispredicted these (round-4 fix; mixed rule runs + blank line too)
-    padded.append("=" * 24)
-    padded.append("  ==== ----  \n\n====____")
+    padded = list(SPECIAL_TEXTS)
     pdf = pd.DataFrame({
         "doc_id": range(len(padded)),
         "text": padded,
@@ -138,6 +142,19 @@ def test_t1_probe_norm_matches_kernel(spark):
     assert got == normalize_text(base + _T1_PROBE)
 
 
+# plain layouts the extract_documents oracle replays in SQL
+MULTIBLOCK_TEXTS = [
+    "para one has plenty of words\n\npara two also has plenty here",
+    "=======\ncontent line with words here\n=======",
+    "page one text with words here\fpage two text with words here",
+    "lead paragraph with words\n\nzx\n\ntail paragraph with words",  # noise mid-block
+    "   indented pdf-ish line one here\n\n\n   another paragraph after gap",
+    "words before rule\n----------\nwords after the long rule line",
+    ("many blocks " + "\n\nblk words here" * 301),       # too_many_blocks
+    "---\n--- three-dash lines are content not rules at all",
+]
+
+
 def test_flagship_oracle_multiblock_plain_layouts(spark, tmp_path):
     """The generalized extract_documents oracle replays FULL plain-mode
     segmentation in SQL (shared separator pattern): multi-paragraph,
@@ -148,16 +165,7 @@ def test_flagship_oracle_multiblock_plain_layouts(spark, tmp_path):
 
     from dup_ocropy_spark.operators.registry import REGISTRY
 
-    texts = [
-        "para one has plenty of words\n\npara two also has plenty here",
-        "=======\ncontent line with words here\n=======",
-        "page one text with words here\fpage two text with words here",
-        "lead paragraph with words\n\nzx\n\ntail paragraph with words",  # noise mid-block
-        "   indented pdf-ish line one here\n\n\n   another paragraph after gap",
-        "words before rule\n----------\nwords after the long rule line",
-        ("many blocks " + "\n\nblk words here" * 301),       # too_many_blocks
-        "---\n--- three-dash lines are content not rules at all",
-    ]
+    texts = MULTIBLOCK_TEXTS
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts,
                         "source": "s0", "lang": "en"})
     pdf["n_chars"] = pdf["text"].str.len()

@@ -3,9 +3,13 @@ join side that scales with the dataset. A forced ``F.broadcast`` is only
 allowed where the side is provably bounded by construction (a 1-row global
 aggregate, or a literal-bounded id filter); everywhere else the strategy is
 left to Catalyst/AQE, which broadcasts at runtime only when the side is
-actually small."""
+actually small. Package hygiene rides along: every module must be
+reachable from an entry point."""
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 
@@ -49,3 +53,53 @@ def test_no_unbounded_broadcast_hints(spark, name):
         assert n_hints == 0, (
             f"{name}: forced broadcast hint on a side that scales with the "
             f"dataset\n{plan[:2000]}")
+
+
+_ROOT = Path(__file__).resolve().parents[1]
+
+
+def _module_file(mod: str) -> Path | None:
+    base = _ROOT.joinpath(*mod.split("."))
+    for f in (base.with_suffix(".py"), base / "__init__.py"):
+        if f.is_file():
+            return f
+    return None
+
+
+def _imported_modules(f: Path) -> set[str]:
+    """Every module an ``import`` anywhere in ``f`` names, function-local
+    imports included; ``from pkg import name`` also names ``pkg.name``
+    (a submodule when such a file exists), and importing a submodule
+    imports each enclosing package."""
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(f.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            pkg = node.module or ""
+            if node.level:
+                parts = f.relative_to(_ROOT).with_suffix("").parts
+                parts = parts[:len(parts) - node.level]
+                pkg = ".".join(p for p in (*parts, pkg) if p)
+            names.add(pkg)
+            names.update(f"{pkg}.{a.name}" for a in node.names)
+    return {".".join(n.split(".")[:i + 1])
+            for n in names for i in range(n.count(".") + 1)}
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Static import graph from the entry points (``__spark_entry__.py``,
+    ``bench.py``, ``jobs/*.py``): every ``dup_ocropy_spark`` module must
+    be reached, so no module survives that only its own test imports."""
+    todo = [_ROOT / "__spark_entry__.py", _ROOT / "bench.py",
+            *sorted((_ROOT / "jobs").glob("*.py"))]
+    seen = set(todo)
+    while todo:
+        for mod in _imported_modules(todo.pop()):
+            f = _module_file(mod)
+            if f is not None and f not in seen:
+                seen.add(f)
+                todo.append(f)
+    package = sorted((_ROOT / "dup_ocropy_spark").rglob("*.py"))
+    unreached = [str(f.relative_to(_ROOT)) for f in package if f not in seen]
+    assert not unreached, f"modules no entry point imports: {unreached}"

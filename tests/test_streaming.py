@@ -1,12 +1,10 @@
-"""Streaming extraction smoke + multimodal binary-column plumbing."""
+"""Structured Streaming extraction: batch parity, windowed throughput,
+watermarked exact/near dedup and the batch-to-stream snapshot handoff."""
 
 from __future__ import annotations
 
 import pytest
 
-from dup_ocropy_spark.operators.multimodal import (
-    FEATURE_DIM, extract_media_features, synth_media,
-)
 from dup_ocropy_spark.plans.extract import extract
 from dup_ocropy_spark.sources.transcripts import write_transcripts
 from dup_ocropy_spark.streaming import (
@@ -233,269 +231,6 @@ def test_stream_band_keys_match_batch_minhash(spark):
                                  for b, k in enumerate(keys)]).collect()[0]
     for b in range(STREAM_BANDS):
         assert stream_row[f"b{b}"] == batch[b], b
-
-
-def test_wav_real_decoder(spark):
-    """The stdlib wave codec is a REAL decode path: PCM sine fixtures yield
-    per-segment RMS envelopes that vary across docs, are deterministic
-    across runs, and garbage bytes fail gracefully."""
-    import numpy as np
-    import pandas as pd
-
-    from dup_ocropy_spark.operators.multimodal import (
-        FEATURE_DIM, extract_media_features, synth_wav_media,
-    )
-
-    media = synth_wav_media(spark, 12)
-    pdf = extract_media_features(media, decoder="wav").toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    assert pdf["decode_ok"].all(), pdf["decode_error"].dropna().tolist()
-    assert (pdf["magic"] == "riff-wav").all()
-    feats = np.array(pdf["feature"].tolist())
-    assert feats.shape == (12, FEATURE_DIM)
-    # the amplitude ramp makes the envelope rise within each clip
-    assert (feats[:, -1] > feats[:, 0]).all()
-    # different docs -> different envelopes; re-run is byte-identical
-    assert len({tuple(f) for f in map(tuple, feats)}) == 12
-    pdf2 = extract_media_features(media, decoder="wav").toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(pdf, pdf2)
-    # garbage payload: decode_ok False, zero feature, no exception
-    bad = spark.createDataFrame(
-        [(99, "audio", bytearray(b"RIFFgarbage-not-a-wav"), (0, 0, 8000, "x"))],
-        "doc_id long, media_type string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,codec:string>")
-    brow = extract_media_features(bad, decoder="wav").collect()[0]
-    assert not brow.decode_ok and "WAV" in brow.decode_error
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media(spark, 48)
-    feats = extract_media_features(media, decoder="fake")
-    pdf = feats.toPandas()
-    assert len(pdf) == 48
-    assert pdf["decode_ok"].all()
-    assert all(len(v) == FEATURE_DIM for v in pdf["feature"])
-    assert set(pdf["magic"]) > {"png", "jpeg"}
-    # deterministic across runs
-    pdf2 = extract_media_features(synth_media(spark, 48), decoder="fake").toPandas()
-    a = pdf.sort_values("doc_id")["feature"].map(tuple).tolist()
-    b = pdf2.sort_values("doc_id")["feature"].map(tuple).tolist()
-    assert a == b
-
-
-def test_multimodal_real_decoder_stub(spark):
-    media = synth_media(spark, 8)
-    pdf = extract_media_features(media, decoder="real").toPandas()
-    assert (~pdf["decode_ok"]).all()
-    assert pdf["decode_error"].str.contains("no codec library").all()
-
-
-def test_png_decode_all_filter_types(spark):
-    """The stdlib PNG decoder must invert every scanline filter (0-4).
-    Forward-filter a known image per spec, wrap it in a valid chunk
-    stream, and require exact pixel recovery (checked via the histogram
-    of a crafted two-value image)."""
-    import zlib
-    from struct import pack
-
-    import numpy as np
-
-    from dup_ocropy_spark.operators.multimodal import (
-        FEATURE_DIM, _PNG_SIG, _png_decode,
-    )
-
-    rng = np.random.default_rng(3)
-    h, w = 7, 11
-    img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-
-    def paeth(a, b, c):
-        p = int(a) + int(b) - int(c)
-        pa, pb, pc = abs(p - int(a)), abs(p - int(b)), abs(p - int(c))
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    body = b""
-    prev = np.zeros(w, dtype=np.int64)
-    for y in range(h):
-        ft = y % 5                      # cycle through every filter type
-        row = img[y].astype(np.int64)
-        filt = np.zeros(w, dtype=np.int64)
-        for x in range(w):
-            a = row[x - 1] if x >= 1 else 0
-            b = prev[x]
-            c = prev[x - 1] if x >= 1 else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(a, b, c)}[ft]
-            filt[x] = (row[x] - pred) & 0xFF
-        body += bytes([ft]) + bytes(filt.astype(np.uint8))
-        prev = row
-
-    def chunk(ctype, data):
-        return (pack(">I", len(data)) + ctype + data
-                + pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    payload = (_PNG_SIG
-               + chunk(b"IHDR", pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-               + chunk(b"IDAT", zlib.compress(body))
-               + chunk(b"IEND", b""))
-    feat = _png_decode(payload, "image")
-    want, _ = np.histogram(img.astype(np.float64), bins=FEATURE_DIM,
-                           range=(0.0, 256.0))
-    assert np.allclose(feat, want / img.size, atol=1e-6)
-
-
-def test_png_media_through_arrow_stage(spark):
-    """Real PNG fixtures decode through the full mapInPandas stage; a
-    corrupted payload reports decode_ok=False, never raises."""
-    from pyspark.sql import functions as F
-
-    from dup_ocropy_spark.operators.multimodal import (
-        extract_media_features, synth_png_media,
-    )
-
-    media = synth_png_media(spark, 9)
-    corrupt = media.limit(1).withColumn(
-        "payload", F.expr("substring(payload, 1, 40)"))  # truncated
-    out = extract_media_features(media.unionByName(corrupt), decoder="png")
-    rows = out.collect()
-    ok = [r for r in rows if r.decode_ok]
-    assert len(ok) == 9 and all(r.magic == "png" for r in ok)
-    assert all(abs(sum(r.feature) - 1.0) < 1e-4 for r in ok)
-    bad = [r for r in rows if not r.decode_ok]
-    assert len(bad) == 1 and bad[0].decode_error is not None
-
-
-def test_png_malformed_variants_always_valueerror():
-    """The review found three malformed-PNG shapes escaping as
-    zlib.error/struct.error and crashing the Spark task: CRC-valid but
-    truncated IDAT stream, payload cut right after a chunk body (CRC
-    bytes missing), and a wrong-size IHDR. All must be ValueError so the
-    stage's quarantine (decode_ok=False) catches them."""
-    import zlib
-    from struct import pack
-
-    import numpy as np
-    import pytest
-
-    from dup_ocropy_spark.operators.multimodal import (
-        _PNG_SIG, _png_decode, encode_png,
-    )
-
-    def chunk(ctype, data):
-        return (pack(">I", len(data)) + ctype + data
-                + pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    full_body = b"".join(b"\x00" + img[y].tobytes() for y in range(8))
-    # 1) every chunk CRC-valid, but the deflate stream itself truncated
-    p1 = (_PNG_SIG
-          + chunk(b"IHDR", pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0))
-          + chunk(b"IDAT", zlib.compress(full_body)[:10])
-          + chunk(b"IEND", b""))
-    # 2) payload cut right after a chunk body (no CRC bytes)
-    good = encode_png(img)
-    p2 = good[:len(_PNG_SIG) + 8 + 13]       # signature + IHDR header+body
-    # 3) IHDR with the wrong byte count (CRC recomputed, so CRC passes)
-    p3 = (_PNG_SIG + chunk(b"IHDR", pack(">II", 8, 8)) + chunk(b"IEND", b""))
-    for p in (p1, p2, p3):
-        with pytest.raises(ValueError):
-            _png_decode(p, "image")
-
-
-def test_validate_media_meta_flags_mislabeled_media(spark):
-    """Declared vs container metadata: correct PNG/WAV fixtures pass,
-    tampered declarations are flagged with the real values, a synthetic
-    JPEG SOF parses, and unverifiable formats report NULL rather than a
-    fake pass."""
-    from struct import pack
-
-    from pyspark.sql import functions as F
-
-    from dup_ocropy_spark.operators.multimodal import (
-        jpeg_dims, synth_png_media, synth_wav_media, validate_media_meta,
-    )
-
-    # minimal JPEG: SOI + SOF0 (h=10, w=20) + EOI
-    sof = b"\xff\xc0" + pack(">H", 8 + 3) + b"\x08" + pack(">HH", 10, 20) + b"\x01"
-    jpeg = b"\xff\xd8" + sof + b"\xff\xd9"
-    assert jpeg_dims(jpeg) == (20, 10)
-
-    good = synth_png_media(spark, 4).unionByName(synth_wav_media(spark, 3))
-    v = validate_media_meta(good).collect()
-    assert all(r.meta_ok is True for r in v), v
-
-    # tamper the declared width of the PNGs
-    bad = synth_png_media(spark, 2).withColumn(
-        "meta", F.named_struct(
-            F.lit("width"), F.col("meta.width") + 7,
-            F.lit("height"), F.col("meta.height"),
-            F.lit("sample_rate"), F.col("meta.sample_rate"),
-            F.lit("codec"), F.col("meta.codec")))
-    vb = validate_media_meta(bad).collect()
-    assert all(r.meta_ok is False and "container says" in r.mismatch for r in vb)
-
-    # unparseable formats -> unverifiable NULL, not a fake pass
-    from dup_ocropy_spark.operators.multimodal import synth_media
-
-    vu = validate_media_meta(synth_media(spark, 10)).collect()
-    unk = [r for r in vu if r.magic in ("ogg", "mp4ish")]
-    assert unk and all(r.meta_ok is None and r.mismatch == "unverifiable"
-                       for r in unk)
-
-
-def test_validate_media_meta_null_struct_is_flagged_not_crashed(spark):
-    """A NULL (or incomplete) declared-metadata struct is exactly the
-    upstream-bug class this stage catches: it must flag the row
-    (meta_ok=False, 'no declared metadata'), never crash the task with a
-    TypeError on meta['width']."""
-    from pyspark.sql import functions as F
-
-    from dup_ocropy_spark.operators.multimodal import (
-        synth_png_media, synth_wav_media, validate_media_meta,
-    )
-
-    meta_t = ("struct<width:int,height:int,sample_rate:int,codec:string>")
-    nulled = (synth_png_media(spark, 2).unionByName(synth_wav_media(spark, 1))
-              .withColumn("meta", F.lit(None).cast(meta_t)))
-    v = validate_media_meta(nulled).collect()
-    assert len(v) == 3
-    assert all(r.meta_ok is False and r.mismatch == "no declared metadata"
-               for r in v), v
-
-    # struct present but the relevant field is null -> same honest flag
-    partial = synth_png_media(spark, 2).withColumn(
-        "meta", F.named_struct(
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.col("meta.height"),
-            F.lit("sample_rate"), F.col("meta.sample_rate"),
-            F.lit("codec"), F.col("meta.codec")))
-    vp = validate_media_meta(partial).collect()
-    assert all(r.meta_ok is False and r.mismatch == "no declared metadata"
-               for r in vp), vp
-
-
-def test_auto_decoder_dispatches_by_magic(spark):
-    """decoder='auto': PNG rows get real luminance histograms, WAV rows
-    real RMS envelopes, opaque formats the deterministic fake — all in
-    one pass, told apart by the magic column."""
-    from dup_ocropy_spark.operators.multimodal import (
-        extract_media_features, synth_media, synth_png_media,
-        synth_wav_media,
-    )
-
-    real = (synth_png_media(spark, 3).unionByName(synth_wav_media(spark, 2)))
-    rows = extract_media_features(real, decoder="auto").collect()
-    assert all(r.decode_ok for r in rows)
-    png = [r for r in rows if r.magic == "png" and sum(r.feature) > 0.99]
-    wav = [r for r in rows if r.magic == "riff-wav"]
-    assert len(png) == 3 and len(wav) == 2   # real decodes
-    # spoofed magic (random bytes behind a PNG/RIFF header) must FAIL the
-    # real decode — auto mode exposes payloads masquerading as a format —
-    # while genuinely opaque formats fall back to the deterministic fake
-    spoof = extract_media_features(synth_media(spark, 10), decoder="auto").collect()
-    spoofed = [r for r in spoof if r.magic in ("png", "riff-wav")]
-    assert spoofed and all(not r.decode_ok for r in spoofed)
-    opaque = [r for r in spoof if r.magic in ("ogg", "mp4ish", "jpeg", "unknown")]
-    assert opaque and all(r.decode_ok for r in opaque)  # fake stand-in
 
 
 def test_snapshot_deduped_stream_drops_batch_history(spark, tmp_path):
