@@ -33,7 +33,7 @@ class ExtractConfig:
     noise_min_chars: int = 8
     max_link_density: float = 0.5
     content_threshold: float = 0.5
-    classifier: str = "rule"  # "rule" | "logistic"
+    classifier: str = "rule"  # "rule" | "logistic" | "logistic_ctx" | "lstm"
     normalize: bool = True
     # trained logistic parameters (operators/train.py); None -> the
     # hand-set defaults in kernels/classify.py. Tuple so the config stays
@@ -42,9 +42,7 @@ class ExtractConfig:
     weights: tuple[float, ...] | None = None
     bias: float | None = None
 
-    # Spark-side knobs
-    salt_buckets: int = 64           # salted repartition buckets (north_rule skew)
-    # Arrow batch row cap: measured optimum for ~KB-sized payloads
+    # Spark-side knob — Arrow batch row cap: measured optimum for ~KB-sized payloads
     # (r2: 71.6k turns/s at 2048 vs 50.1k at 512; r6 re-sweep after the
     # kernel speedup moved the knee — 4096 edges 2048 at sf1.0, 42.6 s
     # vs 43.3 s min-of-3, and 16384 regresses); lower it for

@@ -4,6 +4,10 @@ The single-process oracle (``kernels.oracle``) and the distributed
 pipeline (``plans.extract``) call the *same* functions, so per-turn text
 equality between them is by construction; the thing under test in the
 Spark layer is distribution (ordering, batching, skew, resume).
+
+The extraction chain is ``extract_frame``: gates and ``segment_payload``
+per turn, one ``classify_blocks`` over the batch's documents, then
+``reassemble`` per turn. ``extract_turn`` runs it on one turn.
 """
 
 from dup_ocropy_spark.kernels.textnorm import normalize_text, project_text, requote

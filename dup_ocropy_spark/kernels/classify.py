@@ -6,15 +6,17 @@ lstm.py:879-884`` ``SeqRecognizer.predictString``, ``:741-753``
 ``translate_back``). The graft's per-block classifier plays the same role:
 block features -> score in [0,1] -> threshold decode -> label.
 
-Two scorers:
-  * ``rule``      — deterministic heuristics (the ground-truth oracle path)
-  * ``logistic``  — numpy logistic layer over the same features
-    (``ocrolib/lstm.py:243-300`` ``Logreg``/``Softmax`` analog), weights
-    broadcast per executor in the Spark layer.
+Scorers (``ExtractConfig.classifier``): ``rule`` — deterministic
+heuristics, the ground-truth oracle path; ``logistic`` — a numpy logistic
+layer over the features (``ocrolib/lstm.py:243-300`` ``Logreg`` analog);
+``logistic_ctx`` — the same layer over each block plus its in-document
+neighbors (L6); ``lstm`` — TinyBiLSTM over each document's blocks.
 
-Features are computed vectorized over all blocks of a batch (numpy), not
-per block — the "fully vectorized inside each item" design the reference
-states at ``ocrolib/lstm.py:8-12``.
+``classify_blocks`` is the one entry point: the Spark stage, the
+single-turn API and the training jobs call it once per batch of
+documents, with features computed over all blocks of the batch at once —
+the "fully vectorized inside each item" design the reference states at
+``ocrolib/lstm.py:8-12``.
 """
 
 from __future__ import annotations
@@ -139,9 +141,9 @@ def logistic_scores(X: np.ndarray, weights: np.ndarray | None = None,
 
     The dot product accumulates per-feature terms in fixed column order
     (not BLAS gemv, whose summation order varies with matrix shape), so a
-    block scores bit-identically whether classified alone or inside an
-    arbitrarily large batch — required for classify_blocks_many to be
-    exactly equal to per-document classification."""
+    block scores bit-identically whatever else shares its matrix — the
+    extraction output must not depend on where Arrow batch boundaries fall
+    (partition invariance)."""
     w = LOGISTIC_WEIGHTS if weights is None else weights
     b = LOGISTIC_BIAS if bias is None else bias
     if len(w) != X.shape[1]:  # the old BLAS `X @ w` raised on mismatch;
@@ -154,17 +156,26 @@ def logistic_scores(X: np.ndarray, weights: np.ndarray | None = None,
     return 1.0 / (1.0 + np.exp(-z))
 
 
-def context_features(X: np.ndarray) -> np.ndarray:
+def context_features(X: np.ndarray, doc_lens: list[int] | None = None) -> np.ndarray:
     """Bidirectional block context (reference L6 BIDILSTM analog): each
     block sees its own features plus its predecessor's and successor's
     (zeros at document edges) — the 1-D forward+backward pass over the
-    block sequence, without recurrent state."""
+    block sequence, without recurrent state.
+
+    ``X`` may stack several documents' blocks; ``doc_lens`` gives their
+    block counts in order (default: one document), and no block sees
+    across a document edge."""
     n, d = X.shape
     prev_x = np.zeros_like(X)
     next_x = np.zeros_like(X)
     if n > 1:
         prev_x[1:] = X[:-1]
         next_x[:-1] = X[1:]
+        if doc_lens is not None:
+            edges = np.cumsum(doc_lens)[:-1]
+            edges = edges[(edges > 0) & (edges < n)]
+            prev_x[edges] = 0.0
+            next_x[edges - 1] = 0.0
     return np.hstack([X, prev_x, next_x])
 
 
@@ -198,31 +209,37 @@ def _lstm_scores(X: np.ndarray, flat: np.ndarray | None) -> np.ndarray:
     return model.scores(X)
 
 
-def classify_blocks(blocks: list[Block], config: ExtractConfig = DEFAULT_CONFIG,
-                    weights: np.ndarray | None = None,
-                    bias: float | None = None) -> list[Block]:
-    """Label each block content/boilerplate/noise in place and return them.
+def classify_blocks(doc_blocks: list[list[Block]],
+                    config: ExtractConfig = DEFAULT_CONFIG) -> np.ndarray:
+    """Label every document's blocks content/boilerplate/noise in place
+    and return the flat (n_blocks, n_features) ``block_features`` matrix.
 
-    Decode rule (L8 ``translate_back`` analog): score is thresholded at
+    One feature pass over all documents of the batch. ``rule`` and
+    ``logistic`` score the flat matrix; ``logistic_ctx`` adds each
+    block's neighbors within its own document; ``lstm`` runs the
+    recurrent model over each document's slice. Decode rule (L8
+    ``translate_back`` analog): score is thresholded at
     ``config.content_threshold``; noise blocks (below ``noise_min_chars``)
     are the speckle class and never content (P5).
     """
-    if not blocks:
-        return blocks
-    if weights is None and config.weights is not None:
-        weights = np.asarray(config.weights, dtype=np.float64)
-        bias = config.bias
-    X = block_features(blocks)
+    flat = [b for blocks in doc_blocks for b in blocks]
+    X = block_features(flat)
+    if not flat:
+        return X
+    w = None if config.weights is None else np.asarray(config.weights, dtype=np.float64)
+    bias = config.bias
+    lens = [len(blocks) for blocks in doc_blocks]
     if config.classifier == "lstm":
-        scores = _lstm_scores(X, weights)
+        docs = np.split(X, np.cumsum(lens)[:-1])
+        scores = np.concatenate([_lstm_scores(x, w) for x in docs if len(x)])
+    elif config.classifier == "logistic_ctx":
+        if w is None:
+            w, bias = CTX_WEIGHTS, LOGISTIC_BIAS
+        scores = logistic_scores(context_features(X, lens), w, bias)
     else:
-        if config.classifier == "logistic_ctx":
-            X = context_features(X)
-            if weights is None:
-                weights, bias = CTX_WEIGHTS, LOGISTIC_BIAS
-        scores = logistic_scores(X, weights, bias)
-    _label_blocks(blocks, scores, config)
-    return blocks
+        scores = logistic_scores(X, w, bias)
+    _label_blocks(flat, scores, config)
+    return X
 
 
 def _label_blocks(blocks: list[Block], scores: np.ndarray,
@@ -247,31 +264,3 @@ def _label_blocks(blocks: list[Block], scores: np.ndarray,
                 b.label = "boilerplate"
             else:
                 b.label = "content"
-
-
-def classify_blocks_many(doc_blocks: list[list[Block]],
-                         config: ExtractConfig = DEFAULT_CONFIG,
-                         weights: np.ndarray | None = None,
-                         bias: float | None = None) -> list[list[Block]]:
-    """Classify every document's blocks in one flat feature/score pass.
-
-    Bit-identical to calling ``classify_blocks`` per document (asserted in
-    test_kernels): features are per-block and ``logistic_scores`` is
-    shape-independent by construction. Sequence classifiers (logistic_ctx,
-    lstm) see document-local context, so they keep the per-document path.
-    The win is amortizing the numpy feature-matrix and sigmoid calls over
-    the whole Arrow batch instead of per ~6-block document.
-    """
-    if config.classifier in ("logistic_ctx", "lstm"):
-        for blocks in doc_blocks:
-            classify_blocks(blocks, config, weights, bias)
-        return doc_blocks
-    flat = [b for blocks in doc_blocks for b in blocks]
-    if not flat:
-        return doc_blocks
-    if weights is None and config.weights is not None:
-        weights = np.asarray(config.weights, dtype=np.float64)
-        bias = config.bias
-    scores = logistic_scores(block_features(flat), weights, bias)
-    _label_blocks(flat, scores, config)
-    return doc_blocks

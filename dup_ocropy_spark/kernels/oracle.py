@@ -1,16 +1,20 @@
 """The fused extraction chain + single-process reference oracle.
 
-``extract_turn`` is the complete per-turn pipeline (the analog of running
-nlbin -> gpageseg -> rpred -> hocr on one page): validation gates ->
-segmentation -> classification -> reassembly. ``extract_frame`` applies it
-over a pandas DataFrame — this one function body is shared verbatim by
+``extract_frame`` is the complete pipeline over a pandas batch of turns
+(the analog of running nlbin -> gpageseg -> rpred -> hocr on each page):
+validation gates -> segmentation per turn, one classification over every
+surviving turn's blocks, reassembly per turn. This one function body is
+shared verbatim by
 
-  * the single-process oracle used in tests (ground truth), and
-  * the Spark ``mapInPandas`` stage (``plans/extract.py``),
+  * the single-process oracle used in tests (ground truth),
+  * the Spark ``mapInPandas`` stage (``plans/extract.py``), and
+  * ``extract_turn``, the single-turn API, which runs it on a one-row frame,
 
 so per-turn text equality between oracle and cluster is by construction
 (SURVEY.md section 7.1 design rule 1); the Spark layer is only trusted
-with distribution (partitioning, ordering, resume).
+with distribution (partitioning, ordering, resume). The classifier
+training jobs (``operators/train.py``) run the same gate, segmentation
+and ``classify_blocks`` pair.
 """
 
 from __future__ import annotations
@@ -19,9 +23,14 @@ import numpy as np
 import pandas as pd
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
-from dup_ocropy_spark.kernels.classify import classify_blocks, classify_blocks_many
+from dup_ocropy_spark.kernels.classify import classify_blocks
 from dup_ocropy_spark.kernels.reassemble import reassemble
 from dup_ocropy_spark.kernels.segment import segment_payload
+
+# The classify phase is called through this module-level name, so the
+# benchmark's kernel replay (perfbench/kernel_replay.py) can time it by
+# patching ``oracle.classify_blocks_many``.
+classify_blocks_many = classify_blocks
 
 # Output columns of the extraction stage, in schema order.
 EXTRACT_COLUMNS = (
@@ -39,60 +48,41 @@ EXTRACT_SCHEMA = (
 
 def _gate_and_segment(text: str | None, tool: str | None,
                       forced_boundaries: list[int] | None,
-                      config: ExtractConfig) -> tuple[dict, list | None]:
-    """Validation gates + segmentation for one turn. Returns (out, blocks);
-    blocks is None when a gate rejected the payload (out carries the
-    reject_reason)."""
+                      config: ExtractConfig
+                      ) -> tuple[int, int, str | None, list | None]:
+    """Validation gates + segmentation for one turn ->
+    (payload_len, n_blocks, reject_reason, blocks); blocks is None when a
+    gate rejected the payload. Never raises on bad input — the reference's
+    check_page/check_line gates print-and-skip (``ocropus-nlbin:186-190``)."""
     payload = tool if (tool is not None and tool != "") else (text or "")
-    out = {
-        "payload_len": len(payload),
-        "n_blocks": 0,
-        "n_content": 0,
-        "extracted_text": "",
-        "spans": [],
-        "reject_reason": None,
-    }
+    n = len(payload)
     if payload == "":
-        out["reject_reason"] = "empty"                     # empty-input guard (P7)
-        return out, None
+        return n, 0, "empty", None                 # empty-input guard (P7)
     if payload.strip() == "":
-        out["reject_reason"] = "blank"                     # constant-image analog (N1 None)
-        return out, None
-    if len(payload) < config.min_payload_chars:
-        out["reject_reason"] = "too_short"                 # check_line h<20 analog (P3)
-        return out, None
-    if len(payload) > config.max_payload_chars:
-        out["reject_reason"] = "too_long"                  # check_page >10000px analog (P1)
-        return out, None
+        return n, 0, "blank", None                 # constant-image analog (N1 None)
+    if n < config.min_payload_chars:
+        return n, 0, "too_short", None             # check_line h<20 analog (P3)
+    if n > config.max_payload_chars:
+        return n, 0, "too_long", None              # check_page >10000px analog (P1)
     blocks = segment_payload(payload, forced_boundaries)
-    out["n_blocks"] = len(blocks)
     if len(blocks) > config.max_blocks:
-        out["reject_reason"] = "too_many_blocks"           # maxlines gate (gpageseg:432-434)
-        return out, None
-    return out, blocks
-
-
-def _finish(out: dict, blocks: list, config: ExtractConfig) -> dict:
-    """Reassembly tail shared by the single-turn and batched paths."""
-    extracted, spans = reassemble(blocks, config)
-    out["extracted_text"] = extracted
-    out["spans"] = spans
-    out["n_content"] = len(spans)
-    return out
+        return n, len(blocks), "too_many_blocks", None  # maxlines gate (gpageseg:432-434)
+    return n, len(blocks), None, blocks
 
 
 def extract_turn(text: str | None, tool: str | None = None,
                  forced_boundaries: list[int] | None = None,
                  config: ExtractConfig = DEFAULT_CONFIG) -> dict:
-    """Extract main content from one turn. Never raises on bad input —
-    invalid payloads come back with a ``reject_reason`` (the reference's
-    check_page/check_line gates print-and-skip, ``ocropus-nlbin:186-190``).
-    """
-    out, blocks = _gate_and_segment(text, tool, forced_boundaries, config)
-    if blocks is None:
-        return out
-    classify_blocks(blocks, config)
-    return _finish(out, blocks, config)
+    """Extract main content from one turn: ``extract_frame`` on a one-row
+    frame, as a dict of the per-turn output columns (invalid payloads come
+    back with a ``reject_reason``)."""
+    out = extract_frame(pd.DataFrame({
+        "conv_id": [""], "turn_idx": [0], "text": [text], "tool": [tool],
+        "mask": [forced_boundaries]}), config)
+    row = {c: out[c].iat[0] for c in EXTRACT_COLUMNS[3:]}
+    for c in ("payload_len", "n_blocks", "n_content"):
+        row[c] = int(row[c])
+    return row
 
 
 def extract_frame(pdf: pd.DataFrame, config: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
@@ -102,9 +92,11 @@ def extract_frame(pdf: pd.DataFrame, config: ExtractConfig = DEFAULT_CONFIG) -> 
     This is the Arrow-batch body of the Spark stage; row iteration here is
     the same per-item loop the reference runs inside each pool worker —
     except classification, which runs once over ALL surviving rows' blocks
-    (``classify_blocks_many``): one feature matrix + one sigmoid per Arrow
-    batch instead of per ~6-block document, bit-identical to the per-turn
-    path because scoring is shape-independent (asserted in test_kernels).
+    (``classify_blocks``): one feature matrix + one scoring pass per Arrow
+    batch instead of per ~6-block document. Every scorer is per-block or
+    per-document and ``logistic_scores`` is shape-independent, so where
+    the batch boundaries fall never changes a row's output (asserted in
+    test_kernels).
     """
     n = len(pdf)
     texts = pdf["text"].to_numpy(dtype=object) if "text" in pdf else np.array([None] * n, dtype=object)
@@ -114,12 +106,11 @@ def extract_frame(pdf: pd.DataFrame, config: ExtractConfig = DEFAULT_CONFIG) -> 
     # row-dict detour measured ~15% of batch wall)
     pl = np.empty(n, dtype=np.int32)
     nb = np.empty(n, dtype=np.int32)
-    nc = np.empty(n, dtype=np.int32)
-    et = np.empty(n, dtype=object)
+    nc = np.zeros(n, dtype=np.int32)
+    et = np.full(n, "", dtype=object)
     sp = np.empty(n, dtype=object)
     rr = np.empty(n, dtype=object)
     # phase 1: gates + segmentation per row; collect survivors for phase 2
-    outs: list[dict] = [None] * n  # type: ignore[list-item]
     live_idx: list[int] = []
     live_blocks: list[list] = []
     for i in range(n):
@@ -127,27 +118,22 @@ def extract_frame(pdf: pd.DataFrame, config: ExtractConfig = DEFAULT_CONFIG) -> 
         if masks is not None and masks[i] is not None \
                 and not (np.isscalar(masks[i]) and pd.isna(masks[i])):
             m = list(masks[i])
-        out, blocks = _gate_and_segment(
+        pl[i], nb[i], rr[i], blocks = _gate_and_segment(
             texts[i] if isinstance(texts[i], str) else None,
             tools[i] if isinstance(tools[i], str) else None,
             m, config)
-        outs[i] = out
-        if blocks is not None:
+        if blocks is None:
+            sp[i] = []
+        else:
             live_idx.append(i)
             live_blocks.append(blocks)
     # phase 2: one flat classification over the whole batch
     classify_blocks_many(live_blocks, config)
     # phase 3: reassembly per surviving row
     for i, blocks in zip(live_idx, live_blocks):
-        _finish(outs[i], blocks, config)
-    for i in range(n):
-        r = outs[i]
-        pl[i] = r["payload_len"]
-        nb[i] = r["n_blocks"]
-        nc[i] = r["n_content"]
-        et[i] = r["extracted_text"]
-        sp[i] = r["spans"]
-        rr[i] = r["reject_reason"]
+        et[i], spans = reassemble(blocks, config)
+        sp[i] = spans
+        nc[i] = len(spans)
     out = pd.DataFrame({
         "conv_id": pdf["conv_id"].to_numpy(dtype=object),
         "turn_idx": pdf["turn_idx"].to_numpy().astype("int32"),

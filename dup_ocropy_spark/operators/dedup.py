@@ -217,10 +217,6 @@ def shingles_of(d: DataFrame) -> DataFrame:
                     .alias("sh")))
 
 
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingles_of(table(spark, sf_dir, "documents"))
-
-
 @register(
     "dedup_ngram_jaccard",
     sql=f"""

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from dup_ocropy_spark.functions.intervals import interval_overlap, intervals_intersect
+from dup_ocropy_spark.functions.runs import run_label_col
 from dup_ocropy_spark.operators.registry import register, table
 
 
@@ -129,11 +131,7 @@ def _run_label_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contiguous-run labeling: the 1-D recast of morph.label connected
     components (ocrolib/morph.py:14-27) — boundary-flag cumsum window."""
     e = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    boundary = F.when(
-        F.lag("event_type").over(w).isNull()
-        | (F.lag("event_type").over(w) != F.col("event_type")), 1).otherwise(0)
-    run = F.sum(boundary).over(w.rowsBetween(W.unboundedPreceding, 0))
+    run = run_label_col("event_type", ["user_id"], ["ts", "event_id"])
     return e.select("event_id", "user_id", "event_type",
                     run.alias("run_id"), "ts")
 
@@ -217,7 +215,7 @@ def g11_propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _interval_cond():
     return ((F.col("b_user") == F.col("s_user"))
-            & (F.col("bs") < F.col("se")) & (F.col("ss") < F.col("be")))
+            & intervals_intersect(F.col("bs"), F.col("be"), F.col("ss"), F.col("se")))
 
 
 @register(
@@ -323,8 +321,7 @@ def g16_renumber_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g20_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks, seeds = _blocks_seeds(spark, sf_dir)
     j = blocks.join(seeds, _interval_cond())
-    overlap = F.greatest(F.lit(0.0),
-                         F.least("be", "se") - F.greatest("bs", "ss"))
+    overlap = interval_overlap(F.col("bs"), F.col("be"), F.col("ss"), F.col("se"))
     return j.select("block_id", "seed_id", F.round(overlap, 6).alias("overlap"))
 
 

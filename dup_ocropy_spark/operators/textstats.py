@@ -206,16 +206,3 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     guessed = F.when(F.col("en_hits") >= 1, "en").otherwise("unknown")
     return base.select("doc_id", guessed.alias("guessed_lang"), "en_hits",
                        F.when(guessed == F.col("lang"), 1).otherwise(0).alias("correct"))
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 of the normalized byte stream (normalize-
-    then-hash, the content-checksum used in lineage too). No longer a
-    standalone registry entry — the fp column is driver-checked inside
-    ``quality_score`` (the 50-entry driver window was full and this was
-    the lowest-information row; the slot went to
-    ``extract_documents_classified``)."""
-    d = table(spark, sf_dir, "documents")
-    from dup_ocropy_spark.functions.text import normalized_fp
-
-    return d.select("doc_id", normalized_fp("text").alias("fp"))

@@ -21,10 +21,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG
 from dup_ocropy_spark.kernels.classify import (
-    CTX_FEATURE_NAMES, FEATURE_NAMES, block_features, classify_blocks,
-    context_features,
+    CTX_FEATURE_NAMES, FEATURE_NAMES, classify_blocks, context_features,
 )
-from dup_ocropy_spark.kernels.segment import segment_payload
+from dup_ocropy_spark.kernels.oracle import _gate_and_segment
 
 
 # Reference-trained logistic parameters over FEATURE_NAMES: the output of
@@ -52,26 +51,34 @@ def _feature_names(context: bool) -> tuple[str, ...]:
     return CTX_FEATURE_NAMES if context else FEATURE_NAMES
 
 
-def _iter_labeled_blocks(pdf: pd.DataFrame, context: bool):
-    """Shared per-batch core of every training/calibration stage: gate each
-    payload, segment, rule-classify (ground truth), build the (optionally
-    bidi-context) feature matrix. Yields (blocks, X) per payload."""
-    # default a missing column to a same-length empty series: zipping
-    # against a scalar '' would silently yield zero training rows
-    texts = pdf["text"] if "text" in pdf else [""] * len(pdf)
-    tools = pdf["tool"] if "tool" in pdf else [""] * len(pdf)
+_LABEL_CODES = {"content": 1, "boilerplate": 0, "noise": -1}
+
+
+def _labeled_blocks(pdf: pd.DataFrame, context: bool
+                    ) -> tuple[list[int], np.ndarray, np.ndarray]:
+    """Shared per-batch core of every training/calibration stage: the
+    extraction chain's gate + segmentation per payload, then ONE rule-mode
+    ``classify_blocks`` that labels the blocks (ground truth) and returns
+    their features. -> (blocks per kept payload, flat (optionally
+    bidi-context) features, flat labels: 1 content, 0 boilerplate, -1 noise)."""
+    # default a missing column to a same-length null list: zipping
+    # against a scalar would silently yield zero training rows
+    texts = pdf["text"] if "text" in pdf else [None] * len(pdf)
+    tools = pdf["tool"] if "tool" in pdf else [None] * len(pdf)
+    docs = []
     for text, tool in zip(texts, tools):
-        payload = tool if isinstance(tool, str) and tool else (text or "")
-        if not isinstance(payload, str) or len(payload.strip()) < 20:
-            continue
-        blocks = segment_payload(payload)
-        if not blocks or len(blocks) > DEFAULT_CONFIG.max_blocks:
-            continue
-        classify_blocks(blocks)  # rule labels
-        X = block_features(blocks)
-        if context:
-            X = context_features(X)  # L6 bidi-context frame
-        yield blocks, X
+        blocks = _gate_and_segment(text if isinstance(text, str) else None,
+                                   tool if isinstance(tool, str) else None,
+                                   None, DEFAULT_CONFIG)[3]
+        if blocks:
+            docs.append(blocks)
+    X = classify_blocks(docs)
+    lens = [len(blocks) for blocks in docs]
+    if context:
+        X = context_features(X, lens)  # L6 bidi-context frame
+    labels = np.array([_LABEL_CODES[b.label] for blocks in docs for b in blocks],
+                      dtype=np.int64)
+    return lens, X, labels
 
 
 def _features_batch_fn(context: bool):
@@ -80,14 +87,12 @@ def _features_batch_fn(context: bool):
         (they are gated, not classified)."""
         names = _feature_names(context)
         for pdf in batches:
-            rows = []
-            for blocks, X in _iter_labeled_blocks(pdf, context):
-                for b, x in zip(blocks, X):
-                    if b.label == "noise":
-                        continue
-                    rows.append(list(x) + [1 if b.label == "content" else 0])
-            if rows:
-                yield pd.DataFrame(rows, columns=[*names, "label"])
+            _, X, labels = _labeled_blocks(pdf, context)
+            keep = labels >= 0
+            if keep.any():
+                out = pd.DataFrame(X[keep], columns=list(names))
+                out["label"] = labels[keep]
+                yield out
 
     return _features_batch
 
@@ -185,10 +190,12 @@ def sequence_training_data(n_convs: int = 60) -> tuple[list[np.ndarray], list[np
     labels: list[np.ndarray] = []
     for ci in range(n_convs):
         tdf, _ = synth_conv(ci)
-        for blocks, X in _iter_labeled_blocks(tdf, context=False):
-            sequences.append(X)
-            labels.append(np.array([1.0 if b.label == "content" else 0.0
-                                    for b in blocks]))
+        lens, X, y = _labeled_blocks(tdf, context=False)
+        if not lens:
+            continue
+        cuts = np.cumsum(lens)[:-1]
+        sequences.extend(np.split(X, cuts))
+        labels.extend(np.split((y == 1).astype(np.float64), cuts))
     return sequences, labels
 
 
@@ -215,17 +222,11 @@ def score_label_frame(transcripts: DataFrame,
 
     def _batch(batches):
         for pdf in batches:
-            scores: list[float] = []
-            labels: list[int] = []
-            for blocks, X in _iter_labeled_blocks(pdf, context):
-                sc = logistic_scores(X, weights, bias)
-                for b, s in zip(blocks, sc):
-                    if b.label == "noise":
-                        continue
-                    scores.append(float(s))
-                    labels.append(1 if b.label == "content" else 0)
-            if scores:
-                yield pd.DataFrame({"score": scores, "label": labels})
+            _, X, labels = _labeled_blocks(pdf, context)
+            keep = labels >= 0
+            if keep.any():
+                yield pd.DataFrame({"score": logistic_scores(X[keep], weights, bias),
+                                    "label": labels[keep]})
 
     cols = [c for c in ("text", "tool") if c in transcripts.columns]
     return transcripts.select(*cols).mapInPandas(_batch,

@@ -4,8 +4,7 @@
 Conversations are deterministically assigned to ``n_buckets`` buckets by
 ``pmod(xxhash64(conv_id), n_buckets)``; each bucket commits independently
 (parquet dir + manifest entry — the dev stand-in for an Iceberg snapshot
-commit; with Iceberg on the classpath the writes go through
-``writeTo(...).overwritePartitions()`` instead, see ``iceberg_available``).
+commit; every write is a parquet overwrite of the bucket's directory).
 A restart skips committed buckets and rewrites interrupted ones in place —
 the bucket->conv assignment is a pure function of conv_id, so a rerun
 produces byte-identical bucket contents (resume idempotency fixture,
@@ -27,14 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
 from dup_ocropy_spark.plans.extract import extract
 from dup_ocropy_spark.plans.lineage import count_and_checksum
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def bucket_col(n_buckets: int):

@@ -17,7 +17,6 @@ from dup_ocropy_spark.config import DEFAULT_CONFIG
 
 def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
               shuffle_partitions: int | None = None,
-              arrow_batch_rows: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     # size shuffle width to parallelism: local[N] -> N, local[*]/cluster -> 32
@@ -33,7 +32,7 @@ def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows or DEFAULT_CONFIG.arrow_batch_rows))
+                str(DEFAULT_CONFIG.arrow_batch_rows))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # scan-parallelism floor (r6, guide §6.1): aim for >=4 task waves
         # per scan instead of exactly one — split planning targets

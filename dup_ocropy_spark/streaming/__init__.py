@@ -2,10 +2,8 @@
 
 from dup_ocropy_spark.streaming.extract_stream import (
     deduped_stream, extracted_stream, near_deduped_stream,
-    snapshot_deduped_stream, start_extract_stream, turn_fingerprints,
-    windowed_throughput,
+    snapshot_dedup_sink, turn_fingerprints, windowed_throughput,
 )
 
 __all__ = ["deduped_stream", "extracted_stream", "near_deduped_stream",
-           "snapshot_deduped_stream", "start_extract_stream",
-           "turn_fingerprints", "windowed_throughput"]
+           "snapshot_dedup_sink", "turn_fingerprints", "windowed_throughput"]

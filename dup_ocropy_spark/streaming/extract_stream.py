@@ -125,7 +125,7 @@ def _payload_fp(payload, cols=("conv_id", "turn_idx")):
 
     Fingerprint-table format note: sentinel strings live alongside md5
     hex in persisted turn-fp tables; both producers
-    (``turn_fingerprints``) and consumers (``snapshot_deduped_stream``)
+    (``turn_fingerprints``) and consumers (``snapshot_dedup_sink``)
     must use THIS function — mixing with bare ``normalized_fp`` tables
     desynchronizes blank-turn identity."""
     from dup_ocropy_spark.functions.text import normalized_fp, normalized_text
@@ -246,7 +246,7 @@ def turn_fingerprints(transcripts: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, fp): TURN-grain normalized fingerprints over
     the same payload preference (tool over text) the streaming stages
     use. This is what a nightly batch job materializes for
-    ``snapshot_deduped_stream`` — it is NOT the conversation-grain table
+    ``snapshot_dedup_sink`` — it is NOT the conversation-grain table
     ``curate_job --since-snapshot`` keeps (those fps hash redacted
     reassembled conv_text and can never match a raw turn payload; the
     grains must not be mixed). Uses ``_payload_fp``: blank turns get
@@ -257,53 +257,36 @@ def turn_fingerprints(transcripts: DataFrame) -> DataFrame:
     return transcripts.select(*keep, _payload_fp(payload, cols).alias("fp"))
 
 
-def snapshot_deduped_stream(stream: DataFrame, seen_fps: DataFrame,
-                            watermark: str = "1 hour") -> DataFrame:
-    """Streaming dedup against a batch-maintained TURN-grain fingerprint
-    table: the live stream drops payloads already ingested by prior batch
-    runs BEFORE paying extraction, then exact-dedups within itself inside
-    the watermark (the table covers history; the watermark state covers
-    the current window).
+def snapshot_dedup_sink(snapshot_fps: str, output_path: str):
+    """``foreachBatch`` sink for streaming dedup against a batch-maintained
+    TURN-grain fingerprint table: each micro-batch of ``deduped_stream``
+    output (it keeps ``fp``) drops payloads already in ``snapshot_fps``,
+    then is extracted and appended to ``output_path`` as parquet.
 
-    Grain contract: ``seen_fps`` must be turn-payload fingerprints —
-    build it with ``turn_fingerprints`` over the batch corpus. The
-    conversation-grain table ``curate_job --since-snapshot`` accumulates
-    hashes of redacted reassembled conversation text, which can never
-    equal a raw turn payload's fp; wiring that table in here would make
-    the anti-join silently match nothing.
+    Grain contract: build ``snapshot_fps`` with ``turn_fingerprints`` (or
+    ``extract_job --turn-fp-out``); both sides key on ``_payload_fp``.
+    curate_job's conversation-grain table hashes redacted reassembled
+    conversations and would match nothing here.
 
-    Plumbing: one stream-static left-anti join on fp (no streaming state
-    for the join) + one dropDuplicatesWithinWatermark. Caveat: a
-    parquet-backed static side embedded in the streaming plan PINS its
-    file listing at ``spark.read.parquet`` time — rows appended to the
-    snapshot dir are NOT seen by later micro-batches until the stream
-    restarts. ``spark.catalog.refreshByPath`` does NOT lift this for an
-    uncached relation (it only recaches persisted plans; measured — an
-    appended fp leaked through with a refresh before every batch). For
-    a table that grows mid-run, do the anti-join inside a foreachBatch
-    sink with a FRESH ``spark.read.parquet`` per micro-batch, as
-    ``jobs/stream_job.py --dedup snapshot`` does (two-publish cycle
-    pinned in test_jobs). Fingerprints come from ``_payload_fp`` on BOTH sides
-    (turn_fingerprints uses it too): blank turns carry a
-    (conv_id, turn_idx) sentinel, so distinct payload-less turns never
-    collide on md5('') — the SAME blank turn re-ingested still matches
-    its own snapshot sentinel and dedups, which is exactly right."""
-    cols, payload = _payload_and_cols(stream)
-    return (stream.select(*cols)
-            .withColumn("fp", _payload_fp(payload, cols))
-            .join(seen_fps.select("fp"), "fp", "left_anti")
-            .withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["fp"]))
+    The table is re-read in every micro-batch, so fps a batch publisher
+    appends mid-run gate the next micro-batch (fps written before a
+    landing file are always visible to the batch that reads that file);
+    a not-yet-published table counts as empty history. A parquet static side built once would pin
+    its file listing in the streaming plan, and
+    ``spark.catalog.refreshByPath`` does not lift that for an uncached
+    relation (measured: an appended fp leaked through with a refresh
+    before every batch). On failure-replay ``foreachBatch`` is
+    at-least-once per epoch; readers dedup on (conv_id, turn_idx)."""
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        from pyspark.errors import AnalysisException
 
+        spark = batch_df.sparkSession
+        try:
+            seen = spark.read.parquet(snapshot_fps)
+            seen.schema  # force resolution
+        except AnalysisException:
+            seen = spark.createDataFrame([], "fp string")
+        fresh = batch_df.join(seen.select("fp"), "fp", "left_anti").drop("fp")
+        extracted_stream(fresh).write.mode("append").parquet(output_path)
 
-def start_extract_stream(spark: SparkSession, input_path: str, output_path: str,
-                         checkpoint_path: str,
-                         config: ExtractConfig = DEFAULT_CONFIG):
-    """File-in -> parquet-out streaming job with checkpointed progress."""
-    q = (extracted_stream(transcript_stream(spark, input_path), config)
-         .writeStream
-         .format("parquet")
-         .option("path", output_path)
-         .option("checkpointLocation", checkpoint_path)
-         .outputMode("append"))
-    return q.start()
+    return _sink

@@ -52,7 +52,7 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--turn-fp-out", default=None, metavar="DIR",
                     help="also append TURN-grain payload fingerprints of "
                          "this batch to DIR — the table "
-                         "streaming.snapshot_deduped_stream anti-joins "
+                         "streaming.snapshot_dedup_sink anti-joins "
                          "so the live stream skips already-ingested turns "
                          "(distinct from curate_job's conversation-grain "
                          "snapshot)")
@@ -94,11 +94,10 @@ def main(argv: list[str]) -> int:
         fps = turn_fingerprints(transcripts)
         fps.write.mode("append").parquet(args.turn_fp_out)
         n_fps = spark.read.parquet(args.turn_fp_out).count()
-        # NOTE: a consumer stream runs in its OWN Spark application with
-        # its own cached file listing — refreshing here cannot reach it.
-        # The stream must spark.catalog.refreshByPath(dir) in its session
-        # (or restart) after each batch publish; see
-        # snapshot_deduped_stream's docstring.
+        # a consumer stream picks the appended fps up by itself: its
+        # streaming.snapshot_dedup_sink re-reads this table in every
+        # micro-batch (refreshByPath cannot make a pinned listing see
+        # them; see that sink's docstring)
 
     # reject accounting from the WRITTEN output (it carries
     # reject_reason) — re-running extract() here would execute the

@@ -22,20 +22,16 @@ authority. ``exact`` dedups on the normalized-payload fingerprint only.
 ``--dedup snapshot`` additionally anti-joins each turn against the
 batch-maintained TURN-grain fingerprint table at ``--snapshot-fps``
 (build it with ``streaming.turn_fingerprints`` / ``extract_job
---turn-fp-out``). A parquet static side embedded in a streaming plan
-pins its FILE LISTING at plan time — and ``spark.catalog.refreshByPath``
-does NOT fix that for an uncached relation (it only recaches persisted
-plans; measured here: an appended fp still leaked through with a
-refresh before every batch). So this mode sinks through
-``foreachBatch`` and RE-READS the fp table fresh inside every
-micro-batch (a new file index per batch): fingerprints a batch
-publisher APPENDS mid-run gate the very next micro-batch, no restart
-needed, and the read-then-join order is tied to batch boundaries (no
-race with the publisher: fps written before a landing file are always
-visible to the batch that reads it). Trade-off vs the plain parquet
-sink: on failure-replay foreachBatch is at-least-once per epoch rather
-than exactly-once; downstream readers dedup on (conv_id, turn_idx) as
-with any at-least-once feed.
+--turn-fp-out``). The streaming plan keeps only the fingerprint and the
+in-window dedup; the history anti-join runs in
+``streaming.snapshot_dedup_sink``, a ``foreachBatch`` sink that re-reads
+the fp table in every micro-batch, so fingerprints a batch publisher
+appends mid-run gate the very next micro-batch with no restart (its
+docstring says why a static parquet side cannot, ``refreshByPath``
+included). Trade-off vs the plain parquet sink: on failure-replay
+foreachBatch is at-least-once per epoch rather than exactly-once;
+downstream readers dedup on (conv_id, turn_idx) as with any
+at-least-once feed.
 
 On a real cluster the trigger runs forever; ``--timeout-sec`` bounds the
 run for tests and bounded backfills.
@@ -71,60 +67,28 @@ def main(argv: list[str]) -> int:
                          "(bounded backfill / test mode); default: run forever")
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     args = ap.parse_args(argv)
+    if args.dedup == "snapshot" and not args.snapshot_fps:
+        ap.error("--dedup snapshot requires --snapshot-fps DIR")
 
     from dup_ocropy_spark.session import get_spark
     from dup_ocropy_spark.streaming.extract_stream import (
         deduped_stream, extracted_stream, near_deduped_stream,
-        transcript_stream,
+        snapshot_dedup_sink, transcript_stream,
     )
 
     spark = get_spark(app_name="dup_ocropy_stream")
     stream = transcript_stream(spark, args.input, args.max_files_per_trigger)
-    if args.dedup == "near":
-        stream = near_deduped_stream(stream, args.watermark)
-    elif args.dedup == "exact":
-        stream = deduped_stream(stream, args.watermark).drop("fp")
-    elif args.dedup == "snapshot":
-        if not args.snapshot_fps:
-            ap.error("--dedup snapshot requires --snapshot-fps DIR")
-        # keep only the fp computation + in-window dedup in the streaming
-        # plan (stateful, checkpointed); the HISTORY anti-join moves into
-        # the sink below so its static side can be re-read per batch
-        stream = deduped_stream(stream, args.watermark)
-
     if args.dedup == "snapshot":
-        # a static parquet frame built once would pin its file listing in
-        # the streaming plan (module docstring: refreshByPath does not
-        # help an uncached relation) — re-read the fp table inside each
-        # micro-batch so mid-run appends gate the next batch. Same
-        # anti-join semantics as snapshot_deduped_stream: both sides key
-        # on _payload_fp (deduped_stream / turn_fingerprints), and
-        # in-window-dedup-then-history-join drops exactly the same rows
-        # as the operator's join-then-dedup order.
-        def _sink(batch_df, batch_id):
-            # table probe through Spark per batch (curate_job's rule: the
-            # fp table lives on whatever filesystem the job runs against),
-            # and tolerant of a not-yet-published table — the first
-            # deployment's batches must treat history as empty, not kill
-            # the stream
-            from pyspark.errors import AnalysisException
-
-            try:
-                seen = spark.read.parquet(args.snapshot_fps)
-                seen.schema  # force resolution
-            except AnalysisException:
-                seen = spark.createDataFrame([], "fp string")
-            fresh = (batch_df
-                     .join(seen.select("fp"), "fp", "left_anti")
-                     .drop("fp"))
-            extracted_stream(fresh).write.mode("append").parquet(args.output)
-
-        q = (stream.writeStream
-             .foreachBatch(_sink)
+        q = (deduped_stream(stream, args.watermark).writeStream
+             .foreachBatch(snapshot_dedup_sink(args.snapshot_fps, args.output))
              .option("checkpointLocation", args.checkpoint)
              .outputMode("append")
              .start())
     else:
+        if args.dedup == "near":
+            stream = near_deduped_stream(stream, args.watermark)
+        elif args.dedup == "exact":
+            stream = deduped_stream(stream, args.watermark).drop("fp")
         q = (extracted_stream(stream).writeStream
              .format("parquet")
              .option("path", args.output)

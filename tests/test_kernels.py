@@ -206,11 +206,14 @@ def test_arrow_batch_rows_for_policy():
 
 
 def test_extract_frame_bitwise_equals_per_turn():
-    """extract_frame batches classification over all rows' blocks
-    (classify_blocks_many); the result must be BIT-identical to the
-    row-at-a-time extract_turn path for every classifier — including the
-    pre-rounding span scores, which is only true because logistic_scores
-    accumulates in fixed column order (shape-independent summation)."""
+    """extract_frame classifies all rows' blocks in one pass; where the
+    batch is split must be invisible for every classifier. The whole
+    frame, seeded random chunkings of it and the row-at-a-time
+    extract_turn path must agree exactly — which holds only because
+    logistic_scores accumulates in fixed column order (shape-independent
+    summation) and the sequence scorers never see across a document
+    edge. Masked rows (forced boundaries) ride along."""
+    import numpy as np
     import pandas as pd
 
     from dup_ocropy_spark.kernels import extract_frame
@@ -226,21 +229,46 @@ def test_extract_frame_bitwise_equals_per_turn():
         "tool": [None] * 4,
     })
     pdf = pd.concat([pdf, edge], ignore_index=True)
+    # forced boundaries on every fifth row (the mask column)
+    rng = np.random.default_rng(11)
+    masks = [None] * len(pdf)
+    for i in range(0, len(pdf), 5):
+        payload = pdf.tool.iloc[i] or pdf.text.iloc[i] or ""
+        if len(payload) > 2:
+            masks[i] = sorted(int(p) for p in rng.integers(0, len(payload), size=3))
+    pdf["mask"] = masks
+    from dup_ocropy_spark.kernels.classify import CTX_WEIGHTS
     from dup_ocropy_spark.kernels.lstm import TinyBiLSTM
-    lstm_flat = tuple(TinyBiLSTM(n_in=8, seed=7).to_flat().tolist())
-    for clf in ("rule", "logistic", "logistic_ctx", "lstm"):
-        cfg = (ExtractConfig(classifier="lstm", weights=lstm_flat)
-               if clf == "lstm" else ExtractConfig(classifier=clf))
+    # untrained weights chosen so both labels occur (seed 2: ~65% content)
+    lstm_flat = tuple(TinyBiLSTM(n_in=8, seed=2).to_flat().tolist())
+    ctx_w = CTX_WEIGHTS.copy()
+    ctx_w[8:] = np.random.default_rng(5).normal(size=16)  # neighbors matter
+    configs = {
+        "rule": ExtractConfig(), "logistic": ExtractConfig(classifier="logistic"),
+        "logistic_ctx": ExtractConfig(classifier="logistic_ctx",
+                                      weights=tuple(ctx_w.tolist())),
+        "lstm": ExtractConfig(classifier="lstm", weights=lstm_flat),
+    }
+    cols = ["extracted_text", "spans", "reject_reason", "n_blocks", "n_content",
+            "payload_len"]
+    for clf, cfg in configs.items():
         got = extract_frame(pdf, cfg)
+        for seed in range(3):
+            cuts = sorted(np.random.default_rng(seed).choice(
+                np.arange(1, len(pdf)), size=6, replace=False).tolist())
+            chunked = pd.concat(
+                [extract_frame(pdf.iloc[a:b].reset_index(drop=True), cfg)
+                 for a, b in zip([0, *cuts], [*cuts, len(pdf)])],
+                ignore_index=True)
+            for c in cols:
+                assert chunked[c].tolist() == got[c].tolist(), (clf, seed, c)
         for i in range(len(pdf)):
             want = extract_turn(
                 pdf.text.iloc[i] if isinstance(pdf.text.iloc[i], str) else None,
                 pdf.tool.iloc[i] if isinstance(pdf.tool.iloc[i], str) else None,
-                config=cfg)
-            assert got.extracted_text.iloc[i] == want["extracted_text"], (clf, i)
-            assert got.spans.iloc[i] == want["spans"], (clf, i)
-            assert got.reject_reason.iloc[i] == want["reject_reason"], (clf, i)
-            assert int(got.n_blocks.iloc[i]) == want["n_blocks"], (clf, i)
+                forced_boundaries=masks[i], config=cfg)
+            for c in cols:
+                assert got[c].iloc[i] == want[c], (clf, i, c)
 
 
 def test_self_closing_anchor_does_not_poison_link_density():

@@ -32,6 +32,13 @@ def test_context_features_shape_and_edges():
     assert (C[1, 2 * d:] == X[2]).all()
     # untrained ctx weights reduce to the plain logistic scores
     assert np.allclose(logistic_scores(C, CTX_WEIGHTS), logistic_scores(X))
+    # several documents stacked: doc_lens keeps every neighbor inside its
+    # own document, equal to stacking the per-document frames
+    docs = [X, X[:1], X[1:], X[:2]]
+    flat = np.vstack(docs)
+    want = np.vstack([context_features(x) for x in docs])
+    assert (context_features(flat, [len(x) for x in docs]) == want).all()
+    assert (context_features(flat, [0, len(flat), 0]) == context_features(flat)).all()
 
 
 def test_model_roundtrip(tmp_path):

@@ -103,3 +103,42 @@ def test_every_package_module_is_reachable_from_an_entry_point():
     package = sorted((_ROOT / "dup_ocropy_spark").rglob("*.py"))
     unreached = [str(f.relative_to(_ROOT)) for f in package if f not in seen]
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _ast_names(tree: ast.AST):
+    """Every identifier a tree names: variables, attributes, imports."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1]
+
+
+def test_every_package_function_is_referenced():
+    """Every top-level function or class in the package must be named
+    somewhere outside its own definition — in the package, the jobs, the
+    tests, the benchmark or the entry points — so no helper survives that
+    nothing calls. A decorated definition counts as reached through its
+    decorator (``@register`` puts every registry query in the registry)."""
+    files = [*sorted((_ROOT / "dup_ocropy_spark").rglob("*.py")),
+             *sorted((_ROOT / "jobs").glob("*.py")),
+             *sorted((_ROOT / "tests").rglob("*.py")),
+             *sorted((_ROOT / "perfbench").rglob("*.py")),
+             _ROOT / "bench.py", _ROOT / "__spark_entry__.py"]
+    counts: dict[str, int] = {}
+    defs = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        for name in _ast_names(tree):
+            counts[name] = counts.get(name, 0) + 1
+        if f.is_relative_to(_ROOT / "dup_ocropy_spark"):
+            defs += [(f, node) for node in tree.body
+                     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                          ast.ClassDef))
+                     and not node.decorator_list]
+    unreferenced = [
+        f"{f.relative_to(_ROOT)}:{node.name}" for f, node in defs
+        if counts.get(node.name, 0) == sum(1 for n in _ast_names(node) if n == node.name)]
+    assert not unreferenced, f"functions nothing names: {unreferenced}"

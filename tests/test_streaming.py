@@ -238,14 +238,14 @@ def test_snapshot_deduped_stream_drops_batch_history(spark, tmp_path):
     the batch-maintained table (built with turn_fingerprints — NOT the
     conversation-grain curate_job table, whose fps hash reassembled
     redacted conv_text and can never match a raw turn) are dropped by
-    the stream before extraction; unseen payloads survive, and in-stream
-    duplicates still dedup within the watermark."""
+    the snapshot sink before extraction; unseen payloads survive, and
+    in-stream duplicates still dedup within the watermark."""
     import datetime as dt
 
     import pandas as pd
 
     from dup_ocropy_spark.streaming import (
-        snapshot_deduped_stream, turn_fingerprints,
+        deduped_stream, snapshot_dedup_sink, turn_fingerprints,
     )
 
     base = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
@@ -279,15 +279,16 @@ def test_snapshot_deduped_stream_drops_batch_history(spark, tmp_path):
                   "tool string, ts timestamp")
               .option("maxFilesPerTrigger", 1)
               .parquet(str(src / "*")))
-    q = (snapshot_deduped_stream(stream, spark.read.parquet(snap),
-                                 watermark="1 hour")
-         .writeStream.format("memory").queryName("snap_dedup_out")
+    out = str(tmp_path / "snap_out")
+    q = (deduped_stream(stream, watermark="1 hour").writeStream
+         .foreachBatch(snapshot_dedup_sink(snap, out))
+         .option("checkpointLocation", str(tmp_path / "snap_ckpt"))
          .outputMode("append").start())
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    got = sorted(spark.sql("SELECT text FROM snap_dedup_out").toPandas()["text"])
+    got = sorted(spark.read.parquet(out).toPandas()["extracted_text"])
     # 0 and 1 blocked by history; 2 once (watermark dedup); 3 and 4 new
     assert got == sorted([texts[2], texts[3], texts[4]])
 
@@ -348,8 +349,9 @@ def test_streaming_blank_sentinel_null_identity_no_collision(spark, tmp_path):
 
     import pandas as pd
 
-    from dup_ocropy_spark.streaming import deduped_stream, near_deduped_stream
-    from dup_ocropy_spark.streaming.extract_stream import snapshot_deduped_stream
+    from dup_ocropy_spark.streaming import (
+        deduped_stream, near_deduped_stream, snapshot_dedup_sink,
+    )
 
     base = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
     rows = pd.DataFrame({
@@ -366,11 +368,7 @@ def test_streaming_blank_sentinel_null_identity_no_collision(spark, tmp_path):
         .write.mode("overwrite").parquet(str(src / "f1"))
     stream_schema = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
-    empty_fps = spark.createDataFrame([], "fp string")
-    stages = (("exact", deduped_stream), ("near", near_deduped_stream),
-              ("snap", lambda s, watermark: snapshot_deduped_stream(
-                  s, empty_fps, watermark=watermark)))
-    for name, fn in stages:
+    for name, fn in (("exact", deduped_stream), ("near", near_deduped_stream)):
         stream = (spark.readStream.schema(stream_schema)
                   .parquet(str(src / "*")))
         q = (fn(stream, watermark="1 hour")
@@ -382,6 +380,19 @@ def test_streaming_blank_sentinel_null_identity_no_collision(spark, tmp_path):
             q.stop()
         n = spark.sql(f"SELECT * FROM nullkey_{name}").count()
         assert n == 2, (name, n)
+    # "snap": the snapshot sink, with a not-yet-published (empty) history
+    stream = spark.readStream.schema(stream_schema).parquet(str(src / "*"))
+    out = str(tmp_path / "nullkey_snap")
+    q = (deduped_stream(stream, watermark="1 hour").writeStream
+         .foreachBatch(snapshot_dedup_sink(str(tmp_path / "no_fps"), out))
+         .option("checkpointLocation", str(tmp_path / "nullkey_ckpt"))
+         .outputMode("append").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    n = spark.read.parquet(out).count()
+    assert n == 2, ("snap", n)
 
 
 def test_streaming_near_dedup_tolerates_identity_less_stream(spark, tmp_path):
