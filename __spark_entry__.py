@@ -22,7 +22,7 @@ SF0001 = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline (segment -> classify -> reassemble
-    in one fused mapInPandas) over the sf0.001 documents corpus."""
+    in one fused mapInArrow) over the sf0.001 documents corpus."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return REGISTRY["extract_documents"].spark(spark, SF0001)
 

@@ -8,8 +8,9 @@ of multi-turn conversation transcripts
     transcripts(conv_id string, turn_idx int, role string,
                 text string, tool string, ts timestamp)
 
-with all heavy per-turn work in vectorized pandas/Arrow UDFs
-(``mapInPandas``) and all relational work in native Spark SQL operators.
+with all heavy per-turn work in vectorized Arrow-batch UDFs (the
+extraction stage is one ``mapInArrow``) and all relational work in
+native Spark SQL operators.
 
 Layout
 ------

@@ -13,20 +13,21 @@ layer over the features (``ocrolib/lstm.py:243-300`` ``Logreg`` analog);
 neighbors (L6); ``lstm`` — TinyBiLSTM over each document's blocks.
 
 ``classify_blocks`` is the one entry point: the Spark stage, the
-single-turn API and the training jobs call it once per batch of
-documents, with features computed over all blocks of the batch at once —
-the "fully vectorized inside each item" design the reference states at
-``ocrolib/lstm.py:8-12``.
+single-turn API and the training jobs call it once per batch, on the
+batch's ``BlockTable``, with every feature computed by ``pyarrow.compute``
+kernels over the whole visible-text column at once — the "fully
+vectorized inside each item" design the reference states at
+``ocrolib/lstm.py:8-12``, moved to the Arrow-batch boundary.
 """
 
 from __future__ import annotations
 
-import re as _re
-
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
-from dup_ocropy_spark.kernels.segment import Block
+from dup_ocropy_spark.kernels.segment import BlockTable
 
 
 # Tiny function-word list for the stopword-ratio feature (language-ID
@@ -42,80 +43,68 @@ FEATURE_NAMES = (
 )
 
 
-# digit presence guard: most blocks contain no digits, so one C-level
-# regex scan skips the ten per-digit count scans entirely (punct needs
-# no guard — six str.count memchr scans beat any guarded alternative)
-_DIGIT_RE = _re.compile(r"[0-9]")
 _HEADING_KINDS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6", "title"))
+_STOPWORD_ARRAY = pa.array(sorted(STOPWORDS), type=pa.string())
+_DOTTED_CAPITAL_I = "\u0130".encode()
+
+# Block label codes of ``BlockTable.label``.
+CONTENT, BOILERPLATE, NOISE = 1, 0, -1
 
 
-def block_features(blocks: list[Block]) -> np.ndarray:
-    """(n_blocks, n_features) float64 feature matrix (L1/L2 analog:
-    per-block normalization into a fixed-width feature frame).
+def _block_features(table: BlockTable) -> tuple[np.ndarray, np.ndarray]:
+    """-> (feature matrix, stripped visible length per block).
 
-    All counters are C-level string ops (split / translate-delete), no
-    per-block regex — the 'fully vectorized inside each item' rule."""
-    n = len(blocks)
+    Every counter is one ``pyarrow.compute`` kernel over the batch's
+    visible-text column, never a per-block Python loop. Each equals the
+    Python string operation it replaces (``strip``/``split``/``len``,
+    ``lower`` for the stopword match; tests/test_arrow_text_parity.py
+    checks every code point), and every ratio is one IEEE division of
+    the same two integers, so the matrix is bit-identical to a per-block
+    ``str`` computation."""
+    n = len(table)
+    vis = table.visible
+    text = pc.utf8_trim_whitespace(vis)
+    nt = pc.utf8_length(text).to_numpy()
+    nvfull = pc.utf8_length(vis).to_numpy()
+    # split the TRIMMED text: leading/trailing whitespace would yield
+    # empty edge tokens (Python's split() yields none)
+    words = pc.utf8_split_whitespace(text)
+    nw = np.maximum(pc.list_value_length(words).to_numpy(), 1)
+    flat = pc.list_flatten(words)
+    parent = pc.list_parent_indices(words).to_numpy()
+    # ascii_lower matches lower() here: only U+212A lowers a non-ASCII
+    # char to ASCII ('k'), and no stopword contains a 'k'
+    stop = pc.is_in(pc.ascii_lower(flat), value_set=_STOPWORD_ARRAY)
+    nstop = np.bincount(parent[stop.to_numpy(zero_copy_only=False)], minlength=n)
+    # mean_word_len counts the LOWERED words: U+0130 lowers to two code
+    # points, the only change of length under lower()
+    wchars = np.bincount(parent, weights=pc.utf8_length(flat).to_numpy(), minlength=n)
+    if n and _DOTTED_CAPITAL_I in text.buffers()[2].to_pybytes():  # rare: one memmem
+        wchars += pc.count_substring(text, "\u0130").to_numpy()
+    # one regex count per class: each of these ASCII chars is one code point
+    npunct = pc.count_substring_regex(text, "[.,;:!?]").to_numpy()
+    ndig = np.zeros(n, dtype=np.int64)
+    has_digit = pc.match_substring_regex(text, "[0-9]").to_numpy(zero_copy_only=False)
+    if has_digit.any():
+        ndig[has_digit] = pc.count_substring_regex(text.filter(pa.array(has_digit)),
+                                                   "[0-9]").to_numpy()
     X = np.zeros((n, len(FEATURE_NAMES)), dtype=np.float64)
-    lens = np.empty(n, dtype=np.float64)
-    stop_contains = STOPWORDS.__contains__
-    digit_search = _DIGIT_RE.search
-    heading_kinds = _HEADING_KINDS
-    # text-derived features memoized per CALL (batch-scoped — rebuilt on
-    # every invocation, nothing persists across batches or runs): block
-    # texts repeat heavily inside a batch (~25-50% dup on the synthetic
-    # corpus — boilerplate is repetitive by nature), and five of the
-    # eight features depend on the text alone. Same inputs -> same
-    # floats, so the matrix is bit-identical to the unmemoized loop
-    # (asserted offline over 170k real blocks; r6: 1.9x on this stage).
-    memo: dict[str, tuple[float, float, float, float, float]] = {}
-    memo_get = memo.get
-    for i, b in enumerate(blocks):
-        vis = b.visible
-        t = memo_get(vis)
-        if t is None:
-            text = vis.strip()
-            nt = len(text)
-            nv = nt if nt else 1
-            words = text.lower().split()
-            nw = len(words) or 1
-            nstop = sum(map(stop_contains, words))
-            # punct/digit counts via C-level str.count (memchr scans):
-            # equal by construction to len-diff-after-translate-delete
-            cnt = text.count
-            npunct = (cnt(".") + cnt(",") + cnt(";") + cnt(":")
-                      + cnt("!") + cnt("?"))
-            ndig = ((cnt("0") + cnt("1") + cnt("2") + cnt("3") + cnt("4")
-                     + cnt("5") + cnt("6") + cnt("7") + cnt("8")
-                     + cnt("9")) if digit_search(text) is not None else 0)
-            t = memo[vis] = (
-                float(nt),
-                nstop / nw if nstop else 0.0,
-                npunct / nw if npunct else 0.0,
-                ndig / nv if ndig else 0.0,
-                sum(map(len, words)) / nw if words else 0.0,
-            )
-        lens[i] = t[0]
-        # zeros-initialized matrix: store only nonzero values (numpy
-        # scalar stores are ~100ns each; most blocks have no links/
-        # digits/boiler, so skipping the zero stores is a real cut)
-        nvfull = len(vis)
-        if b.link_chars and nvfull:
-            X[i, 1] = b.link_chars / nvfull   # == Block.link_density
-        if b.boiler:
-            X[i, 2] = 1.0
-        if t[1]:
-            X[i, 3] = t[1]                    # stopword_ratio
-        if t[2]:
-            X[i, 4] = t[2]                    # punct_per_word
-        if t[3]:
-            X[i, 5] = t[3]                    # digit_ratio
-        if t[4]:
-            X[i, 6] = t[4]                    # mean_word_len
-        if b.kind in heading_kinds:
-            X[i, 7] = 1.0
-    X[:, 0] = np.log1p(lens)  # vectorized over the batch, not per block
-    return X
+    X[:, 0] = np.log1p(nt.astype(np.float64))
+    np.divide(table.link_chars, nvfull, out=X[:, 1], where=nvfull > 0)
+    X[:, 2] = table.boiler
+    X[:, 3] = nstop / nw
+    X[:, 4] = npunct / nw
+    X[:, 5] = ndig / np.maximum(nt, 1)
+    X[:, 6] = wchars / nw
+    X[:, 7] = np.fromiter(map(_HEADING_KINDS.__contains__, table.kind), dtype=bool,
+                          count=n)
+    return X, nt
+
+
+def block_features(table: BlockTable) -> np.ndarray:
+    """(n_blocks, n_features) float64 feature matrix (L1/L2 analog:
+    per-block normalization into a fixed-width feature frame)."""
+    return _block_features(table)[0]
 
 
 # Hand-set logistic weights over FEATURE_NAMES (+bias). Chosen so the
@@ -209,10 +198,11 @@ def _lstm_scores(X: np.ndarray, flat: np.ndarray | None) -> np.ndarray:
     return model.scores(X)
 
 
-def classify_blocks(doc_blocks: list[list[Block]],
+def classify_blocks(table: BlockTable,
                     config: ExtractConfig = DEFAULT_CONFIG) -> np.ndarray:
-    """Label every document's blocks content/boilerplate/noise in place
-    and return the flat (n_blocks, n_features) ``block_features`` matrix.
+    """Label every block of a batch's ``BlockTable`` content/boilerplate/
+    noise (``table.label``, ``table.score``) and return its
+    (n_blocks, n_features) ``block_features`` matrix.
 
     One feature pass over all documents of the batch. ``rule`` and
     ``logistic`` score the flat matrix; ``logistic_ctx`` adds each
@@ -222,45 +212,28 @@ def classify_blocks(doc_blocks: list[list[Block]],
     ``config.content_threshold``; noise blocks (below ``noise_min_chars``)
     are the speckle class and never content (P5).
     """
-    flat = [b for blocks in doc_blocks for b in blocks]
-    X = block_features(flat)
-    if not flat:
-        return X
+    X, nt = _block_features(table)
     w = None if config.weights is None else np.asarray(config.weights, dtype=np.float64)
     bias = config.bias
-    lens = [len(blocks) for blocks in doc_blocks]
-    if config.classifier == "lstm":
-        docs = np.split(X, np.cumsum(lens)[:-1])
-        scores = np.concatenate([_lstm_scores(x, w) for x in docs if len(x)])
+    # blocks per document (rows are contiguous in the table)
+    cuts = np.flatnonzero(np.diff(table.row)) + 1
+    if not len(X):
+        scores = np.zeros(0, dtype=np.float64)
+    elif config.classifier == "lstm":
+        scores = np.concatenate([_lstm_scores(x, w) for x in np.split(X, cuts)])
     elif config.classifier == "logistic_ctx":
         if w is None:
             w, bias = CTX_WEIGHTS, LOGISTIC_BIAS
-        scores = logistic_scores(context_features(X, lens), w, bias)
+        scores = logistic_scores(context_features(X, np.diff(cuts, prepend=0,
+                                                             append=len(X))),
+                                 w, bias)
     else:
         scores = logistic_scores(X, w, bias)
-    _label_blocks(flat, scores, config)
+    if config.classifier in ("logistic", "logistic_ctx", "lstm"):
+        content = scores >= config.content_threshold
+    else:  # rule mode: deterministic ground truth by construction
+        content = ~(table.boiler | (X[:, 1] > config.max_link_density))
+    table.label = np.where(nt < config.noise_min_chars, NOISE,
+                           np.where(content, CONTENT, BOILERPLATE)).astype(np.int8)
+    table.score = scores
     return X
-
-
-def _label_blocks(blocks: list[Block], scores: np.ndarray,
-                  config: ExtractConfig) -> None:
-    """Apply the L8 decode rule to (block, score) pairs in place."""
-    model_mode = config.classifier in ("logistic", "logistic_ctx", "lstm")
-    noise_min = config.noise_min_chars
-    thr = config.content_threshold
-    max_ld = config.max_link_density
-    # tolist() up front: iterating numpy float64 scalars (and float()-ing
-    # each) costs ~3x a native-float loop over the same values
-    for b, sc in zip(blocks, scores.tolist()):
-        b.score = sc
-        if len(b.visible.strip()) < noise_min:   # == Block.n_visible
-            b.label = "noise"
-        elif model_mode:
-            b.label = "content" if sc >= thr else "boilerplate"
-        else:  # rule mode: deterministic ground truth by construction
-            if b.boiler:
-                b.label = "boilerplate"
-            elif b.link_density > max_ld:
-                b.label = "boilerplate"
-            else:
-                b.label = "content"

@@ -17,15 +17,19 @@ layout text) and the analog structures are:
     applied inside the one segmentation pass: the offsets are sorted and
     walked by a cursor in the same tokenizer loop that serves unmasked
     payloads (an int sentinel stands in when there are none)
-  * reading order (O1/O3)   -> blocks sorted by payload position, ids
-    densified 0..n-1 (``psegutils.py:127-164``, ``morph.py:229-246``)
+  * reading order (O1/O3)   -> blocks emitted in payload position order,
+    ids dense 0..n-1 per payload (``psegutils.py:127-164``,
+    ``morph.py:229-246``)
 
 Every block carries its raw character extent ``[start, end)`` into the
 original payload — these become the output ``spans``.
 
-Pure Python/regex over one payload; called per row from inside an Arrow
-batch (the reference is likewise per-page imperative inside
-``multiprocessing`` workers).
+The tokenizer is pure Python/regex over one payload (the reference is
+likewise per-page imperative inside ``multiprocessing`` workers).
+``segment_batch`` runs it over every payload of an Arrow batch and
+returns one ``BlockTable`` (struct-of-arrays) for the vectorized classify
+and reassemble phases; ``segment_payload`` is the one-payload ``Block``
+view of it.
 """
 
 from __future__ import annotations
@@ -34,6 +38,9 @@ import html as _html
 import re
 from dataclasses import dataclass
 from itertools import chain
+
+import numpy as np
+import pyarrow as pa
 
 
 # Tags that terminate the current block (line-separator analogs).
@@ -78,7 +85,8 @@ _LEAD_RULE_RE = re.compile(r"[ \t]*[-=_*]")
 
 @dataclass(slots=True)
 class Block:
-    """A contiguous visible-text run with its raw payload extent."""
+    """One block of a single payload, as ``segment_payload`` returns it:
+    a contiguous visible-text run with its raw payload extent."""
 
     start: int            # raw char offset, inclusive
     end: int              # raw char offset, exclusive
@@ -86,28 +94,36 @@ class Block:
     kind: str = "text"    # enclosing block element name or 'text'
     link_chars: int = 0   # visible chars inside <a> (link-density feature)
     boiler: bool = False  # inside a boilerplate container
-    block_id: int = -1    # dense document-order id, assigned at the end
-    label: str = ""       # filled by classify_blocks
-    score: float = 0.0    # filled by classify_blocks
-
-    @property
-    def n_visible(self) -> int:
-        return len(self.visible.strip())
-
-    @property
-    def link_density(self) -> float:
-        nv = len(self.visible)
-        return self.link_chars / nv if nv else 0.0
+    block_id: int = -1    # dense document-order id
 
 
-def _trim_extent(payload: str, start: int, end: int) -> tuple[int, int]:
-    """Shrink [start, end) to exclude flanking whitespace so spans are
-    tight (content at payload start/end yields start=0 / end=len)."""
-    while start < end and payload[start].isspace():
-        start += 1
-    while end > start and payload[end - 1].isspace():
-        end -= 1
-    return start, end
+@dataclass(slots=True)
+class BlockTable:
+    """Every block of a batch of payloads as one struct-of-arrays, in
+    (row, payload position) order. ``row`` indexes the batch; ``block_id``
+    is the dense document-order id within its row. ``label`` (codes in
+    ``kernels.classify``) and ``score`` are filled by ``classify_blocks``."""
+
+    row: np.ndarray         # int64
+    start: np.ndarray       # int64 raw char offset, inclusive
+    end: np.ndarray         # int64 raw char offset, exclusive
+    visible: pa.StringArray
+    kind: np.ndarray        # object: enclosing block element name or 'text'
+    link_chars: np.ndarray  # int64
+    boiler: np.ndarray      # bool
+    block_id: np.ndarray    # int64
+    label: np.ndarray | None = None
+    score: np.ndarray | None = None
+
+    def __len__(self) -> int:
+        return len(self.row)
+
+    def take(self, keep: np.ndarray) -> BlockTable:
+        """The blocks where ``keep`` (bool mask) is set; unclassified."""
+        return BlockTable(self.row[keep], self.start[keep], self.end[keep],
+                          self.visible.filter(pa.array(keep)), self.kind[keep],
+                          self.link_chars[keep], self.boiler[keep],
+                          self.block_id[keep])
 
 
 # cursor sentinel past every payload offset: an int, so the unmasked
@@ -118,16 +134,20 @@ _NO_BOUNDARY = 1 << 62
 _END_RE = re.compile(r"\Z(/)?(/)?(/)?(/)?")
 
 
-def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
-    """Tokenize markup into blocks. Visible text runs between tags
-    accumulate into the pending block; block-level tags, plain separators
-    inside a run and forced boundaries flush it (the seed-propagation
-    analog: every visible run between two separators is one region)."""
+def _segment_html(payload: str, forced: list[int] | None, row: int,
+                  out: list[tuple]) -> None:
+    """Tokenize markup into blocks, appended to ``out`` as (row, start,
+    end, visible, kind, link_chars, boiler) tuples. Visible text runs
+    between tags accumulate into the pending block; block-level tags,
+    plain separators inside a run and forced boundaries flush it (the
+    seed-propagation analog: every visible run between two separators is
+    one region)."""
     n = len(payload)
     bounds = sorted(set(forced)) + [_NO_BOUNDARY] if forced else [_NO_BOUNDARY]
     bi = 0
     nxt = bounds[0]           # next forced boundary not yet applied
-    blocks: list[Block] = []
+    append = out.append
+    rule_match = _RULE_LINE_RE.match
     # pending pieces: (start, end, decoded_text, link_chars, boiler)
     segs: list[tuple[int, int, str, int, bool]] = []
     seg_kind = "text"
@@ -150,11 +170,17 @@ def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
             link_chars = sum(t[3] for t in segs)
             boiler = any(t[4] for t in segs)
         segs.clear()
-        if not visible.strip():
+        stripped = visible.strip()
+        # blank runs and rule-only blocks (hline removal, P4) are
+        # separators, not blocks
+        if not stripped or (stripped[0] in "-=_*" and rule_match(stripped)):
             return
-        s, e = _trim_extent(payload, s, e)
-        blocks.append(Block(start=s, end=e, visible=visible, kind=seg_kind,
-                            link_chars=link_chars, boiler=boiler))
+        # tight raw extent: C-level strips, the same whitespace set as
+        # str.isspace (content at payload start/end keeps 0 / len)
+        raw = payload[s:e]
+        lead = raw.lstrip()
+        append((row, s + len(raw) - len(lead), e - len(lead) + len(lead.rstrip()),
+                visible, seg_kind, link_chars, boiler))
 
     for m in chain(_TAG_RE.finditer(payload), (_END_RE.match(payload, n),)):
         closing_s, name, attrs_s, selfclose_s = m.groups()
@@ -256,15 +282,15 @@ def _segment_html(payload: str, forced: list[int] | None) -> list[Block]:
         pos = mend
     if segs:
         flush()
-    return blocks
 
 
-def _segment_plain(payload: str, forced: list[int] | None) -> list[Block]:
+def _segment_plain(payload: str, forced: list[int] | None, row: int,
+                   out: list[tuple]) -> None:
     """Split layout text at forced boundaries, then each piece (as its own
-    string) at plain separators; every resulting run is one block."""
+    string) at plain separators; every non-blank, non-rule run is one
+    block, appended to ``out`` like ``_segment_html`` does."""
     n = len(payload)
     cuts = [0, *sorted({p for p in forced if 0 < p < n}), n] if forced else [0, n]
-    blocks: list[Block] = []
     unescape = _html.unescape
     for s, e in zip(cuts, cuts[1:]):
         text = payload[s:e]
@@ -279,29 +305,58 @@ def _segment_plain(payload: str, forced: list[int] | None) -> list[Block]:
         for a, b in runs:
             piece = payload[a:b]
             decoded = unescape(piece) if "&" in piece else piece
-            if decoded.strip():
-                a, b = _trim_extent(payload, a, b)
-                blocks.append(Block(start=a, end=b, visible=decoded))
-    return blocks
+            stripped = decoded.strip()
+            if not stripped or (stripped[0] in "-=_*"
+                                and _RULE_LINE_RE.match(stripped)):
+                continue
+            lead = piece.lstrip()
+            out.append((row, a + len(piece) - len(lead),
+                        b - len(lead) + len(lead.rstrip()),
+                        decoded, "text", 0, False))
+
+
+def segment_batch(payloads: list[str],
+                  forced_boundaries: list[list[int] | None] | None = None
+                  ) -> BlockTable:
+    """Segment a batch of payloads into one ``BlockTable``; the blocks of
+    ``payloads[i]`` carry ``row == i``, in payload order.
+
+    Auto-detects markup per payload: payloads containing tags go through
+    the HTML tokenizer; plain/layout text (e.g. PDF-extracted ``tool``
+    payloads) splits on form feeds, blank-line runs, and ASCII rules.
+    Blocks come out in reading order (O1/O3/G16: payload position), so
+    ids are dense 0..n-1 per row.
+    """
+    out: list[tuple] = []
+    has_markup = _HAS_MARKUP_RE.search
+    for row, payload in enumerate(payloads):
+        if not payload:
+            continue
+        forced = forced_boundaries[row] if forced_boundaries is not None else None
+        if has_markup(payload):
+            _segment_html(payload, forced, row, out)
+        else:
+            _segment_plain(payload, forced, row, out)
+    cols = tuple(zip(*out)) if out else ((),) * 7  # the seven block columns
+    row = np.array(cols[0], dtype=np.int64)
+    counts = np.bincount(row, minlength=len(payloads))
+    firsts = np.cumsum(counts) - counts
+    return BlockTable(
+        row=row,
+        start=np.array(cols[1], dtype=np.int64),
+        end=np.array(cols[2], dtype=np.int64),
+        visible=pa.array(cols[3], type=pa.string()),
+        kind=np.array(cols[4], dtype=object),
+        link_chars=np.array(cols[5], dtype=np.int64),
+        boiler=np.array(cols[6], dtype=bool),
+        block_id=np.arange(len(row), dtype=np.int64) - np.repeat(firsts, counts),
+    )
 
 
 def segment_payload(payload: str, forced_boundaries: list[int] | None = None) -> list[Block]:
-    """Segment one payload into document-ordered blocks with raw extents.
-
-    Auto-detects markup: payloads containing tags go through the HTML
-    tokenizer; plain/layout text (e.g. PDF-extracted ``tool`` payloads)
-    splits on form feeds, blank-line runs, and ASCII rules.
-    """
-    if not payload:
-        return []
-    if _HAS_MARKUP_RE.search(payload):
-        blocks = _segment_html(payload, forced_boundaries)
-    else:
-        blocks = _segment_plain(payload, forced_boundaries)
-    # hline-removal analog (P4): rule-only blocks are separators, not content
-    blocks = [b for b in blocks if not _RULE_LINE_RE.match(b.visible.strip())]
-    # reading order + dense renumber (O1/O3/G16): payload order, ids 0..n-1
-    blocks.sort(key=lambda b: (b.start, b.end))
-    for i, b in enumerate(blocks):
-        b.block_id = i
-    return blocks
+    """Segment one payload into document-ordered ``Block``s: the
+    single-payload view of ``segment_batch``."""
+    t = segment_batch([payload], [forced_boundaries])
+    return [Block(*fields) for fields in zip(
+        t.start.tolist(), t.end.tolist(), t.visible.to_pylist(), t.kind.tolist(),
+        t.link_chars.tolist(), t.boiler.tolist(), t.block_id.tolist())]

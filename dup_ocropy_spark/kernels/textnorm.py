@@ -17,6 +17,10 @@ from __future__ import annotations
 import re
 import unicodedata
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 # (pattern, replacement) pairs; order matters. Kept in sync with
 # functions/text.py:NORMALIZE_SQL_CHAIN (test_textnorm guards the parity).
 REPLACEMENTS: list[tuple[str, str]] = [
@@ -82,6 +86,55 @@ def normalize_text(s: str) -> str:
     if _ANY_SPECIAL.search(s) is None:  # common case: no homographs present
         return s
     return s.translate(_HOMOGRAPH_TABLE)  # one pass == the 18-sub chain
+
+
+def _column(arr: pa.Array) -> list[str]:
+    return arr.to_numpy(zero_copy_only=False).tolist()  # ~3x pyarrow's to_pylist
+
+
+def _replace_rows(arr: pa.Array, rows: np.ndarray, values: list[str]) -> pa.Array:
+    mask = np.zeros(len(arr), dtype=bool)
+    mask[rows] = True
+    return pc.replace_with_mask(arr, pa.array(mask), pa.array(values, type=arr.type))
+
+
+# the homograph table as (char, replacement) pairs: replaced one after the
+# other they equal the one-pass translate, because no replacement output
+# contains a table character (see _table_from_replacements), and a
+# C-level ``in`` + ``replace`` per pair beats translate's per-char dict
+# lookups ~4x on the rows that need it
+_HOMOGRAPH_PAIRS = [(chr(c), r) for c, r in _HOMOGRAPH_TABLE.items()]
+
+
+def _replace_homographs(s: str) -> str:
+    for ch, repl in _HOMOGRAPH_PAIRS:
+        if ch in s:
+            s = s.replace(ch, repl)
+    return s
+
+
+def normalize_array(arr: pa.Array) -> pa.Array:
+    """``normalize_text`` over a string column: NFC through
+    ``unicodedata`` on the non-ASCII rows only, the whitespace collapse
+    as an Arrow split + join (the same whitespace set as ``str.split``;
+    tests/test_arrow_text_parity.py) on the rows holding anything but
+    printable ASCII and single spaces, and the homograph table only on
+    the rows that contain one of its characters."""
+    rows = np.flatnonzero(~pc.string_is_ascii(arr).to_numpy(zero_copy_only=False))
+    if len(rows):
+        arr = _replace_rows(arr, rows, [unicodedata.normalize("NFC", s) for s in
+                                        _column(arr.take(pa.array(rows)))])
+    arr = pc.utf8_trim_whitespace(arr)
+    collapse = pc.match_substring_regex(arr, "[^ -~]|  ")
+    if pc.any(collapse).as_py():
+        arr = pc.replace_with_mask(arr, collapse, pc.binary_join(
+            pc.utf8_split_whitespace(arr.filter(collapse)), " "))
+    rows = np.flatnonzero(pc.match_substring_regex(arr, _ANY_SPECIAL.pattern)
+                          .to_numpy(zero_copy_only=False))
+    if len(rows):
+        arr = _replace_rows(arr, rows, [_replace_homographs(s) for s in
+                                        _column(arr.take(pa.array(rows)))])
+    return arr
 
 
 _DOTROWS = re.compile(r"( *[.] *){4,}")

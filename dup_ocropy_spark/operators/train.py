@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG
@@ -51,34 +52,26 @@ def _feature_names(context: bool) -> tuple[str, ...]:
     return CTX_FEATURE_NAMES if context else FEATURE_NAMES
 
 
-_LABEL_CODES = {"content": 1, "boilerplate": 0, "noise": -1}
-
-
 def _labeled_blocks(pdf: pd.DataFrame, context: bool
-                    ) -> tuple[list[int], np.ndarray, np.ndarray]:
+                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Shared per-batch core of every training/calibration stage: the
-    extraction chain's gate + segmentation per payload, then ONE rule-mode
-    ``classify_blocks`` that labels the blocks (ground truth) and returns
-    their features. -> (blocks per kept payload, flat (optionally
-    bidi-context) features, flat labels: 1 content, 0 boilerplate, -1 noise)."""
-    # default a missing column to a same-length null list: zipping
-    # against a scalar would silently yield zero training rows
-    texts = pdf["text"] if "text" in pdf else [None] * len(pdf)
-    tools = pdf["tool"] if "tool" in pdf else [None] * len(pdf)
-    docs = []
-    for text, tool in zip(texts, tools):
-        blocks = _gate_and_segment(text if isinstance(text, str) else None,
-                                   tool if isinstance(tool, str) else None,
-                                   None, DEFAULT_CONFIG)[3]
-        if blocks:
-            docs.append(blocks)
-    X = classify_blocks(docs)
-    lens = [len(blocks) for blocks in docs]
+    extraction chain's gates + segmentation over the batch, then ONE
+    rule-mode ``classify_blocks`` that labels the block table (ground
+    truth) and returns its features. -> (blocks per payload that has any,
+    flat (optionally bidi-context) features, flat labels: 1 content,
+    0 boilerplate, -1 noise)."""
+    # a missing column is an all-null one: every payload gates as empty
+    nulls = pa.nulls(len(pdf), pa.string())
+    _, _, _, blocks = _gate_and_segment(
+        pa.array(pdf["text"], from_pandas=True, type=pa.string()) if "text" in pdf else nulls,
+        pa.array(pdf["tool"], from_pandas=True, type=pa.string()) if "tool" in pdf else nulls,
+        None, DEFAULT_CONFIG)
+    X = classify_blocks(blocks)
+    lens = np.bincount(blocks.row, minlength=len(pdf))
+    lens = lens[lens > 0]
     if context:
         X = context_features(X, lens)  # L6 bidi-context frame
-    labels = np.array([_LABEL_CODES[b.label] for blocks in docs for b in blocks],
-                      dtype=np.int64)
-    return lens, X, labels
+    return lens, X, blocks.label.astype(np.int64)
 
 
 def _features_batch_fn(context: bool):
@@ -191,7 +184,7 @@ def sequence_training_data(n_convs: int = 60) -> tuple[list[np.ndarray], list[np
     for ci in range(n_convs):
         tdf, _ = synth_conv(ci)
         lens, X, y = _labeled_blocks(tdf, context=False)
-        if not lens:
+        if not len(lens):
             continue
         cuts = np.cumsum(lens)[:-1]
         sequences.extend(np.split(X, cuts))

@@ -1,7 +1,7 @@
 """Flagship extraction queries exposed to the driver's correctness gate.
 
 ``extract_documents`` runs the REAL pipeline (segment -> classify ->
-reassemble inside one mapInPandas) over the driver's ``documents`` table,
+reassemble inside one mapInArrow) over the registry's ``documents`` table,
 treating each document as a single-turn conversation. Because that corpus
 is plain single-block ASCII text (verified: no newlines/markup at sf0.001-
 0.1), the end-to-end result is exactly SQL-expressible, which makes the

@@ -3,11 +3,13 @@
 Reference shape (``run-test:5-11``): nlbin -> gpageseg -> rpred -> hocr,
 four processes communicating through files, parallel per page via
 ``multiprocessing.Pool``. Spark shape (SURVEY.md section 4 'stage
-fusion'): ONE fused ``mapInPandas`` stage running the whole per-turn
-kernel chain — payloads cross the JVM->Python Arrow boundary exactly
-once — wrapped in native operators:
+fusion'): ONE fused ``mapInArrow`` stage running the whole per-turn
+kernel chain (``kernels.oracle.extract_batch``) on each Arrow record
+batch — payloads cross the JVM->Python Arrow boundary exactly once, and
+no pandas conversion happens on either side — wrapped in native
+operators:
 
-    scan -> [opt-in salted repartition] -> mapInPandas(extract) -> [window/agg]
+    scan -> [opt-in salted repartition] -> mapInArrow(extract) -> [window/agg]
 
 Design notes for 100 TB scale:
   * The per-turn stage needs no key co-location at all — turns are
@@ -32,22 +34,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
-from dup_ocropy_spark.kernels.oracle import EXTRACT_SCHEMA, extract_frame
+from dup_ocropy_spark.kernels.oracle import EXTRACT_SCHEMA, extract_batch
 
 INPUT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool")
 
 
-def make_extract_stage(config: ExtractConfig = DEFAULT_CONFIG):
-    """Arrow-batch iterator body for mapInPandas; the closure carries only
-    the (tiny, frozen) config — model weights ride a broadcast variable in
-    classify mode (see operators/train.py)."""
+def extract_stage(df: DataFrame, config: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
+    """The fused ``mapInArrow`` extraction over ``df``'s columns (a ``ts``
+    column is passed through). The closure carries only the (tiny,
+    frozen) config — model weights ride a broadcast variable in classify
+    mode (see operators/train.py)."""
 
     def stage(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield extract_frame(pdf, config)
+        for batch in batches:
+            if batch.num_rows:
+                yield extract_batch(batch, config)
 
-    return stage
+    schema = EXTRACT_SCHEMA + (", ts timestamp" if "ts" in df.columns else "")
+    return df.mapInArrow(stage, schema=schema)
 
 
 def extract(transcripts: DataFrame, config: ExtractConfig = DEFAULT_CONFIG,
@@ -74,7 +78,7 @@ def extract(transcripts: DataFrame, config: ExtractConfig = DEFAULT_CONFIG,
         n = repartition or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         # salted spread: hash includes turn_idx, so a hot conv_id fans out
         df = df.repartition(n, F.xxhash64("conv_id", "turn_idx"))
-    return df.mapInPandas(make_extract_stage(config), schema=EXTRACT_SCHEMA)
+    return extract_stage(df, config)
 
 
 def ordered(extracted: DataFrame) -> DataFrame:

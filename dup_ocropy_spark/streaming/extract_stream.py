@@ -2,7 +2,7 @@
 
 The reference is batch-only (SURVEY.md §2.11); this is the Spark-native
 upgrade path: new transcript partitions landing in a directory are picked
-up incrementally, run through the identical ``mapInPandas`` stage
+up incrementally, run through the identical ``mapInArrow`` stage
 (stateless, so it is streaming-safe), and appended to the sink with
 exactly-once file-source semantics. Late/duplicate turns are handled by
 idempotent downstream overwrite (resume.py), not watermark state — but a
@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dup_ocropy_spark.config import DEFAULT_CONFIG, ExtractConfig
-from dup_ocropy_spark.kernels.oracle import EXTRACT_SCHEMA
-from dup_ocropy_spark.plans.extract import make_extract_stage
+from dup_ocropy_spark.plans.extract import extract_stage
 from dup_ocropy_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -29,25 +28,20 @@ def transcript_stream(spark: SparkSession, input_path: str,
 
 def extracted_stream(stream: DataFrame,
                      config: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Stateless extraction over a streaming DataFrame. The ``ts`` column
-    (when the stream has one) is carried through for watermarked
-    downstream aggregation — extract_frame passes it untouched."""
+    """Stateless extraction over a streaming DataFrame: the batch
+    pipeline's ``mapInArrow`` stage. The ``ts`` column (when the stream
+    has one) is carried through as its Arrow column, for watermarked
+    downstream aggregation."""
     cols = [c for c in ("conv_id", "turn_idx", "role", "text", "tool", "ts")
             if c in stream.columns]
-    schema = EXTRACT_SCHEMA + (", ts timestamp" if "ts" in cols else "")
-    return stream.select(*cols).mapInPandas(make_extract_stage(config),
-                                            schema=schema)
+    return extract_stage(stream.select(*cols), config)
 
 
 def windowed_throughput(stream: DataFrame, config: ExtractConfig = DEFAULT_CONFIG,
                         window: str = "1 minute", watermark: str = "5 minutes") -> DataFrame:
     """Monitoring agg: extracted turns + content blocks per event-time
     window, tolerant of late turns up to the watermark."""
-    cols = [c for c in ("conv_id", "turn_idx", "role", "text", "tool", "ts")
-            if c in stream.columns]
-    out = stream.select(*cols).mapInPandas(
-        make_extract_stage(config), schema=EXTRACT_SCHEMA + ", ts timestamp")
-    return (out.withWatermark("ts", watermark)
+    return (extracted_stream(stream, config).withWatermark("ts", watermark)
             .groupBy(F.window("ts", window).alias("w"))
             .agg(F.count("*").alias("n_turns"),
                  F.sum("n_content").alias("n_content_blocks"),

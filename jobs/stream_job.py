@@ -10,7 +10,7 @@
 Pipeline (all bounded-state, append mode):
 
     file stream -> [watermarked exact or near-dup dedup] ->
-    fused extraction mapInPandas -> parquet sink (exactly-once via the
+    fused extraction mapInArrow -> parquet sink (exactly-once via the
     checkpointed file-source log)
 
 ``--dedup near`` chains one dropDuplicatesWithinWatermark per minhash

@@ -271,6 +271,30 @@ def test_extract_frame_bitwise_equals_per_turn():
                 assert got[c].iloc[i] == want[c], (clf, i, c)
 
 
+def test_extract_batch_passes_null_turn_idx_through():
+    """A null ``turn_idx`` comes back null, not as an int32 sentinel; the
+    other identity columns and ``ts`` pass through untouched."""
+    import pyarrow as pa
+
+    from dup_ocropy_spark.kernels.oracle import extract_batch
+
+    batch = pa.record_batch({
+        "conv_id": pa.array(["a", None, "c"]),
+        "turn_idx": pa.array([None, 1, 2], pa.int64()),
+        "role": pa.array(["user", "tool", None]),
+        "text": pa.array(["<p>a paragraph long enough to keep</p>", None, ""]),
+        "tool": pa.array([None, "tool payload that is long enough", None]),
+        "ts": pa.array([0, None, 2], pa.timestamp("us", tz="UTC")),
+    })
+    out = extract_batch(batch)
+    assert out.schema.field("turn_idx").type == pa.int32()
+    assert out.column("turn_idx").to_pylist() == [None, 1, 2]
+    assert out.column("conv_id").to_pylist() == ["a", None, "c"]
+    assert out.column("role").to_pylist() == ["user", "tool", None]
+    assert out.column("ts").equals(batch.column("ts"))
+    assert out.column("reject_reason").to_pylist() == [None, None, "empty"]
+
+
 def test_self_closing_anchor_does_not_poison_link_density():
     """'<a href="#"/>' must not leave a_depth permanently open: with the
     greedy attr regex the trailing '/' lands in the attribute group, and

@@ -11,7 +11,7 @@ from dup_ocropy_spark.kernels.classify import (
     CTX_FEATURE_NAMES, CTX_WEIGHTS, FEATURE_NAMES, block_features,
     context_features, logistic_scores,
 )
-from dup_ocropy_spark.kernels.segment import segment_payload
+from dup_ocropy_spark.kernels.segment import segment_batch
 from dup_ocropy_spark.operators.train import train_classifier
 from dup_ocropy_spark.plans.extract import extract
 from dup_ocropy_spark.sources.models import config_with_model, load_model, save_model
@@ -19,9 +19,9 @@ from dup_ocropy_spark.sources.transcripts import synth_transcripts
 
 
 def test_context_features_shape_and_edges():
-    blocks = segment_payload("<p>first paragraph with words</p>"
-                             "<p>second paragraph with words</p>"
-                             "<p>third paragraph with words</p>")
+    blocks = segment_batch(["<p>first paragraph with words</p>"
+                            "<p>second paragraph with words</p>"
+                            "<p>third paragraph with words</p>"])
     X = block_features(blocks)
     C = context_features(X)
     assert C.shape == (3, 3 * len(FEATURE_NAMES))

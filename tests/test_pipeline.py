@@ -49,6 +49,17 @@ def test_per_turn_equality_vs_construction(spark, extracted_pdf):
     assert mism.sum() == 0, extracted_pdf[mism].head()
 
 
+def test_extract_keeps_null_turn_idx(spark):
+    """A null turn_idx survives the Spark extraction stage as null."""
+    df = spark.createDataFrame(
+        [("c", None, "user", "<p>a paragraph that is long enough</p>", None),
+         ("c", 3, "user", "another payload long enough to pass", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string")
+    rows = extract(df).orderBy("extracted_text").collect()
+    assert [r.turn_idx for r in rows] == [None, 3]
+    assert rows[0].extracted_text == "a paragraph that is long enough"
+
+
 def test_per_turn_equality_vs_oracle(spark, transcripts, extracted_pdf):
     """Spark output == single-process oracle over the same rows."""
     raw = transcripts.orderBy("conv_id", "turn_idx").toPandas()

@@ -4,7 +4,8 @@ allowed where the side is provably bounded by construction (a 1-row global
 aggregate, or a literal-bounded id filter); everywhere else the strategy is
 left to Catalyst/AQE, which broadcasts at runtime only when the side is
 actually small. Package hygiene rides along: every module must be
-reachable from an entry point."""
+reachable from an entry point, and the extraction plan must keep its one
+fused Arrow stage."""
 
 from __future__ import annotations
 
@@ -142,3 +143,47 @@ def test_every_package_function_is_referenced():
         f"{f.relative_to(_ROOT)}:{node.name}" for f, node in defs
         if counts.get(node.name, 0) == sum(1 for n in _ast_names(node) if n == node.name)]
     assert not unreferenced, f"functions nothing names: {unreferenced}"
+
+
+def _python_nodes(plan: str) -> dict[str, int]:
+    return {node: plan.count(node)
+            for node in ("MapInArrow", "MapInPandas", "BatchEvalPython",
+                         "ArrowEvalPython")}
+
+
+@pytest.fixture(scope="module")
+def transcript_dir(spark, tmp_path_factory):
+    from dup_ocropy_spark.sources.transcripts import write_transcripts
+
+    path = str(tmp_path_factory.mktemp("plan_shape_in"))
+    write_transcripts(spark, path, 6)
+    return path
+
+
+def test_extract_plan_has_one_arrow_map_and_no_pandas_stage(spark, transcript_dir):
+    """The executed plan of ``extract`` holds exactly one Python node, the
+    fused ``MapInArrow`` stage: no pandas conversion and no row-at-a-time
+    Python UDF on either side of it."""
+    from dup_ocropy_spark.plans.extract import extract
+
+    df = extract(spark.read.parquet(transcript_dir))
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _python_nodes(plan) == {"MapInArrow": 1, "MapInPandas": 0,
+                                   "BatchEvalPython": 0, "ArrowEvalPython": 0}, plan
+
+
+def test_streaming_extract_plan_has_one_arrow_map(spark, transcript_dir):
+    """The streaming path runs the same single ``MapInArrow`` stage."""
+    from dup_ocropy_spark.streaming import extracted_stream
+    from dup_ocropy_spark.streaming.extract_stream import transcript_stream
+
+    q = (extracted_stream(transcript_stream(spark, transcript_dir))
+         .writeStream.format("noop").trigger(availableNow=True).start())
+    try:
+        q.awaitTermination()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert _python_nodes(plan) == {"MapInArrow": 1, "MapInPandas": 0,
+                                   "BatchEvalPython": 0, "ArrowEvalPython": 0}, plan
