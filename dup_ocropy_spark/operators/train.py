@@ -52,51 +52,55 @@ def _feature_names(context: bool) -> tuple[str, ...]:
     return CTX_FEATURE_NAMES if context else FEATURE_NAMES
 
 
-def _labeled_blocks(pdf: pd.DataFrame, context: bool
+def _labeled_blocks(batch: pa.RecordBatch, context: bool
                     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Shared per-batch core of every training/calibration stage: the
-    extraction chain's gates + segmentation over the batch, then ONE
-    rule-mode ``classify_blocks`` that labels the block table (ground
-    truth) and returns its features. -> (blocks per payload that has any,
-    flat (optionally bidi-context) features, flat labels: 1 content,
-    0 boilerplate, -1 noise)."""
+    extraction chain's gates + segmentation over the batch's ``text`` /
+    ``tool`` columns, then ONE rule-mode ``classify_blocks`` that labels
+    the block table (ground truth) and returns its features. -> (blocks
+    per payload that has any, flat (optionally bidi-context) features,
+    flat labels: 1 content, 0 boilerplate, -1 noise)."""
     # a missing column is an all-null one: every payload gates as empty
-    nulls = pa.nulls(len(pdf), pa.string())
+    nulls = pa.nulls(batch.num_rows, pa.string())
+    cols = batch.schema.names
     _, _, _, blocks = _gate_and_segment(
-        pa.array(pdf["text"], from_pandas=True, type=pa.string()) if "text" in pdf else nulls,
-        pa.array(pdf["tool"], from_pandas=True, type=pa.string()) if "tool" in pdf else nulls,
+        batch.column("text") if "text" in cols else nulls,
+        batch.column("tool") if "tool" in cols else nulls,
         None, DEFAULT_CONFIG)
     X = classify_blocks(blocks)
-    lens = np.bincount(blocks.row, minlength=len(pdf))
+    lens = np.bincount(blocks.row, minlength=batch.num_rows)
     lens = lens[lens > 0]
     if context:
         X = context_features(X, lens)  # L6 bidi-context frame
     return lens, X, blocks.label.astype(np.int64)
 
 
-def _features_batch_fn(context: bool):
-    def _features_batch(batches):
-        """payloads -> (features, rule label) rows; noise blocks excluded
-        (they are gated, not classified)."""
-        names = _feature_names(context)
-        for pdf in batches:
-            _, X, labels = _labeled_blocks(pdf, context)
+def _labeled_map(transcripts: DataFrame, context: bool, names: tuple[str, ...],
+                 doubles) -> DataFrame:
+    """One ``mapInArrow`` over the payload columns -> (``names`` double
+    columns, rule ``label`` int) per non-noise block (noise is gated, not
+    classified); ``doubles(X)`` maps the block features to the ``names``
+    columns."""
+    schema = pa.schema([*(pa.field(n, pa.float64()) for n in names),
+                        pa.field("label", pa.int32())])
+
+    def _batch(batches):
+        for batch in batches:
+            _, X, labels = _labeled_blocks(batch, context)
             keep = labels >= 0
             if keep.any():
-                out = pd.DataFrame(X[keep], columns=list(names))
-                out["label"] = labels[keep]
-                yield out
+                yield pa.RecordBatch.from_arrays(
+                    [*map(pa.array, doubles(X[keep]).T),
+                     pa.array(labels[keep], type=pa.int32())], schema=schema)
 
-    return _features_batch
+    cols = [c for c in ("text", "tool") if c in transcripts.columns]
+    return transcripts.select(*cols).mapInArrow(
+        _batch, schema=", ".join(f"{n} double" for n in names) + ", label int")
 
 
 def block_training_frame(transcripts: DataFrame, context: bool = False) -> DataFrame:
     """Distributed feature/label extraction over the transcript table."""
-    schema = (", ".join(f"{n} double" for n in _feature_names(context))
-              + ", label int")
-    cols = [c for c in ("text", "tool") if c in transcripts.columns]
-    return transcripts.select(*cols).mapInPandas(_features_batch_fn(context),
-                                                 schema=schema)
+    return _labeled_map(transcripts, context, _feature_names(context), lambda X: X)
 
 
 def _sample_features(features: DataFrame, sample: int,
@@ -183,7 +187,9 @@ def sequence_training_data(n_convs: int = 60) -> tuple[list[np.ndarray], list[np
     labels: list[np.ndarray] = []
     for ci in range(n_convs):
         tdf, _ = synth_conv(ci)
-        lens, X, y = _labeled_blocks(tdf, context=False)
+        lens, X, y = _labeled_blocks(
+            pa.RecordBatch.from_pandas(tdf[["text", "tool"]], preserve_index=False),
+            context=False)
         if not len(lens):
             continue
         cuts = np.cumsum(lens)[:-1]
@@ -210,20 +216,11 @@ def score_label_frame(transcripts: DataFrame,
                       context: bool = False) -> DataFrame:
     """Distributed (score, rule_label) pairs per non-noise block: the raw
     material for decision-threshold calibration. Feature extraction +
-    scoring fan out in one mapInPandas; nothing else leaves the JVM."""
+    scoring fan out in one mapInArrow; nothing else leaves the JVM."""
     from dup_ocropy_spark.kernels.classify import logistic_scores
 
-    def _batch(batches):
-        for pdf in batches:
-            _, X, labels = _labeled_blocks(pdf, context)
-            keep = labels >= 0
-            if keep.any():
-                yield pd.DataFrame({"score": logistic_scores(X[keep], weights, bias),
-                                    "label": labels[keep]})
-
-    cols = [c for c in ("text", "tool") if c in transcripts.columns]
-    return transcripts.select(*cols).mapInPandas(_batch,
-                                                 schema="score double, label int")
+    return _labeled_map(transcripts, context, ("score",),
+                        lambda X: logistic_scores(X, weights, bias)[:, None])
 
 
 def calibrate_threshold(transcripts: DataFrame,

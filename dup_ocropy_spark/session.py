@@ -3,7 +3,10 @@
 AQE + Arrow on, UTC session timezone (DuckDB-oracle comparability),
 shuffle partitions sized to cores (not the 200 default), Arrow batch
 rows capped so multi-KB payload rows don't blow executor memory
-(SURVEY.md section 4 'Spill/memory').
+(SURVEY.md section 4 'Spill/memory'), and a generated-class cache that
+holds the whole query registry, so each query's code is compiled once
+per session rather than on every run. Every entry point (jobs, bench,
+tests) builds its session here; ``extra_conf`` overrides any setting.
 """
 
 from __future__ import annotations
@@ -59,6 +62,16 @@ def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
                 .lower() not in ("", "0", "false", "no") else "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "256m"))
+        # generated-class cache sized to the registry's working set: the
+        # nine perfbench registry_mix queries generate ~170 distinct
+        # classes and the full 50-query registry ~510 (sf0.001), against
+        # Spark's 100-entry LRU default — which evicts every class before
+        # its next use, so each re-run re-compiled 163-165 classes in
+        # Janino (~7 ms median each) and re-warmed them in the JIT. 2048
+        # (~4x the registry) compiles each class once per session:
+        # registry_mix steady-state passes compile 0 classes. Static SQL
+        # conf: only the builder can set it.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

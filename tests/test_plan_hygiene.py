@@ -187,3 +187,16 @@ def test_streaming_extract_plan_has_one_arrow_map(spark, transcript_dir):
         q.stop()
     assert _python_nodes(plan) == {"MapInArrow": 1, "MapInPandas": 0,
                                    "BatchEvalPython": 0, "ArrowEvalPython": 0}, plan
+
+
+def test_training_plans_have_one_arrow_map_and_no_pandas_stage(spark, transcript_dir):
+    """Classifier training and threshold calibration run the extraction
+    chain in one ``MapInArrow`` stage each, with no pandas conversion."""
+    from dup_ocropy_spark.operators.train import block_training_frame, score_label_frame
+
+    transcripts = spark.read.parquet(transcript_dir)
+    for df in (block_training_frame(transcripts), score_label_frame(transcripts)):
+        df.write.format("noop").mode("overwrite").save()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert _python_nodes(plan) == {"MapInArrow": 1, "MapInPandas": 0,
+                                       "BatchEvalPython": 0, "ArrowEvalPython": 0}, plan
