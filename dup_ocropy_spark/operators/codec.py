@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from dup_ocropy_spark.kernels import bpe
+from dup_ocropy_spark.operators.registry import spread_small_input
 
 
 def corpus_word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -34,13 +35,10 @@ def corpus_word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Java's ASCII-only ``\\s``: the kernel and the trainer must segment
     words identically or they train different codecs (the 'IDENTICAL
     merges' contract; pinned on a non-ASCII-whitespace corpus)."""
-    from dup_ocropy_spark.operators.registry import spread_small_input
-
     words = F.explode(F.filter(F.split(F.col(text_col), bpe.ws_regex_java()),
                                lambda x: x != "")).alias("word")
     # spread: the regex split + explode IS this pass's cost and runs in
-    # the scan stage (3.4 s single-task on the one-row-group sf1.0
-    # corpus file; identity at real scale — see spread_small_input)
+    # the scan stage (3.4 s single-task on the one-row-group sf1.0 file)
     return (spread_small_input(docs).select(words)
             .groupBy("word").agg(F.count("*").alias("count")))
 

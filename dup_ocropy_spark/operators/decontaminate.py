@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dup_ocropy_spark.operators.registry import spread_small_input
 from dup_ocropy_spark.plans.cache import persist_shared
 
 NGRAM_WORDS = 8
@@ -103,8 +104,6 @@ def contamination(docs: DataFrame, benchmark: DataFrame,
         total_chars = benchmark.agg(
             F.sum(F.length("text")).alias("c")).collect()[0]["c"] or 0
         broadcast = total_chars <= BENCH_BROADCAST_MAX_CHARS
-    from dup_ocropy_spark.operators.registry import spread_small_input
-
     bench_grams = (
         word_ngrams(benchmark.select(F.lit("b").alias("doc_id"), "text"), n,
                     hashed=True)
@@ -113,8 +112,7 @@ def contamination(docs: DataFrame, benchmark: DataFrame,
         bench_grams = F.broadcast(bench_grams)
     # spread the corpus scan: the per-row gram hashing (xxhash64 per word
     # + per position) is the operator's whole cost and runs in the SCAN
-    # stage — a single-row-group corpus file would execute it on 1-2
-    # cores (identity at real scale, see spread_small_input)
+    # stage
     hits = (word_ngrams(spread_small_input(docs).select("doc_id", "text"),
                         n, hashed=True)
             .join(bench_grams, "gram")

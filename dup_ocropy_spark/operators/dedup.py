@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dup_ocropy_spark.plans.cache import persist_shared
 
-from dup_ocropy_spark.operators.registry import register, table
+from dup_ocropy_spark.operators.registry import register, spread_small_input, table
 
 # char-shingle parameters shared by jaccard + minhash so results compare
 SHINGLE_LEN = 20
@@ -205,8 +205,6 @@ def shingles_of(d: DataFrame) -> DataFrame:
     fidelity). The DuckDB twin unions the same tail window. The
     ``array_distinct`` below keeps POSITIONS unique (the tail position
     can coincide with a stride point), not shingle values."""
-    from dup_ocropy_spark.operators.registry import spread_small_input
-
     d = spread_small_input(d)
     last = F.greatest(F.length("text") - F.lit(SHINGLE_LEN - 1), F.lit(1))
     pos = F.explode(F.array_distinct(F.concat(
@@ -470,14 +468,9 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
 def simhash_pairs(docs: DataFrame) -> DataFrame:
     # persist: the self-join would otherwise run the Python signature UDF
     # twice (measured 2x wall at sf0.1; jobs/dedup_job.py --two-phase
-    # materializes the signature table as parquet instead)
-    # a small input (one parquet split) would run the Python signature
-    # kernel AND the band-join probe as a single task. Spreading the input
-    # BEFORE mapInPandas parallelizes both; skipped when the scan already
-    # has enough splits (the 100 TB case), where it would only add an
-    # Exchange ahead of the fused kernel stage.
-    from dup_ocropy_spark.operators.registry import spread_small_input
-
+    # materializes the signature table as parquet instead); spread BEFORE
+    # mapInPandas so the Python signature kernel and the band-join probe
+    # of a one-split input do not run as a single task
     docs = spread_small_input(docs)
     return simhash_pairs_from(persist_shared(simhash_signatures(docs)))
 

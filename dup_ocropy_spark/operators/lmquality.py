@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from dup_ocropy_spark.plans.cache import persist_shared
 
 from dup_ocropy_spark.kernels import charlm
+from dup_ocropy_spark.operators.registry import spread_small_input
 from dup_ocropy_spark.operators.sampling import deterministic_sample
 
 
@@ -55,8 +56,6 @@ def lm_scores(docs: DataFrame, table: np.ndarray,
     """Append ``lm_logprob`` (mean per-byte log-prob; higher = more
     prose-like). The table rides the task closure (~0.5 MB, the
     broadcast-weights pattern of the trained-classifier query)."""
-    from dup_ocropy_spark.operators.registry import spread_small_input
-
     docs = spread_small_input(docs)
     L = np.ascontiguousarray(table, dtype=np.float32)
     cols = docs.columns

@@ -38,24 +38,31 @@ def register(name: str, sql: str | None, doc: str = ""):
 
 
 def spread_small_input(df):
-    """Give a compute-heavy stage enough input splits to use every core.
+    """Give a compute-heavy stage enough input splits to use every core,
+    deciding at plan time without starting a Spark job.
 
     Parquet files split at ROW-GROUP granularity: a single-row-group file
-    (the driver tables here: documents.parquet at sf1.0 is 5.9 MB, one
-    row group, 50k rows) scans as 1-2 tasks no matter how small
-    ``maxPartitionBytes`` goes — so every downstream regex/n-gram/Python
-    kernel in the same stage ran on 1-2 of 32 cores (r6 measurement: the
-    BPE word-count split alone was 3.4 s single-task). One round-robin
-    exchange of the tiny table (a few MB) buys full-width compute.
+    (documents.parquet at sf1.0: 5.9 MB, one row group) scans as 1-2
+    tasks however small ``maxPartitionBytes`` goes, so every kernel fused
+    into the scan stage ran on 1-2 of 32 cores (r6: the BPE word-count
+    split alone was 3.4 s single-task). One round-robin exchange of the
+    tiny table buys full-width compute.
 
-    Scale-adaptive by construction: when the scan already carries at
-    least ``defaultParallelism`` splits (any real multi-row-group table,
-    every 100 TB table), this is the identity — no exchange is added, so
-    production plans keep scan-fused pipelines and pushdown. Mirrors the
-    pre-existing guard in ``dedup.simhash_pairs`` and the SCALE.md §7a
-    rule (size inputs so tasks >> cores)."""
+    A frame whose plan already holds an exchange comes back unchanged:
+    its width is the shuffle's, sized to the cores by ``get_spark``.
+    Under AQE (Spark's default) exactly the plans with an exchange or a
+    subquery are an ``AdaptiveSparkPlanExec``, and asking such a frame
+    for its RDD would run its shuffle stages as jobs of their own, which
+    the query built on top runs again. Any other plan is narrow over its
+    scans, and building its RDD only plans the splits; fewer than
+    ``defaultParallelism`` get the exchange. So a second call is a no-op,
+    and the spread is the identity on any table with enough splits, every
+    100 TB one (SCALE.md section 8)."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    if qe.toRdd().getNumPartitions() < par:
         return df.repartition(par)
     return df
 

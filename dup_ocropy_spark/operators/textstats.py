@@ -50,6 +50,22 @@ def repetition_fractions(t):
     return dlf, dwf
 
 
+def quality_metrics(t):
+    """(n_words, avg_word_len, stop_ratio, dup_line_frac, dup_word_frac)
+    of text column ``t``, unrounded: the one definition behind the
+    quality_score query and the curation gates, which each round and
+    gate them themselves."""
+    n_words = F.size(F.split(F.trim(t), r"\s+")).cast("bigint")
+    # strip ALL whitespace, not just spaces: newlines/tabs in multi-line
+    # docs are not word characters (they inflated the metric by ~1 char
+    # per line — enough to flip is_quality near the gate boundary)
+    awl = F.length(F.regexp_replace(t, r"\s", "")).cast("double") / n_words
+    # case-folded whole-word counts (see _word_count)
+    stop_ratio = ((_word_count(t, "the") + _word_count(t, "a"))
+                  .cast("double") / n_words)
+    return (n_words, awl, stop_ratio) + repetition_fractions(t)
+
+
 # DuckDB twins of repetition_fractions (text expr interpolated via {t})
 DUP_LINE_SQL = (
     "1 - CAST(len(list_distinct(list_filter(string_split({t}, chr(10)), "
@@ -151,15 +167,7 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").where(F.length(F.trim("text")) > 0)
-    n_words = F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
-    # strip ALL whitespace, not just spaces: newlines/tabs in multi-line
-    # docs are not word characters (they inflated the metric by ~1 char
-    # per line — enough to flip is_quality near the gate boundary)
-    awl = (F.length(F.regexp_replace("text", r"\s", "")).cast("double")
-           / n_words)
-    stop_hits = (_word_count(F.col("text"), "the") + _word_count(F.col("text"), "a"))
-    stop_ratio = stop_hits.cast("double") / n_words
-    dlf, dwf = repetition_fractions(F.col("text"))
+    n_words, awl, stop_ratio, dlf, dwf = quality_metrics(F.col("text"))
     from dup_ocropy_spark.functions.text import normalized_fp
 
     fp = normalized_fp("text")

@@ -28,24 +28,13 @@ from dup_ocropy_spark.plans.extract import conversation_text, extract
 
 def quality_columns(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Append n_words / avg_word_len / stop_ratio / dup_line_frac /
-    dup_word_frac / is_quality (the same arithmetic as the oracle-checked
-    quality_score query)."""
-    from dup_ocropy_spark.operators.textstats import (
-        _word_count, repetition_fractions,
-    )
+    dup_word_frac / is_quality (``textstats.quality_metrics``, the
+    metrics of the oracle-checked quality_score query, with curation's
+    own stop-ratio gate)."""
+    from dup_ocropy_spark.operators.textstats import quality_metrics
 
     t = F.col(text_col)
-    n_words = F.size(F.split(F.trim(t), r"\s+")).cast("bigint")
-    # strip ALL whitespace: conv_text is \n-joined, and counting the 199
-    # newlines of a 200-turn doc as word chars inflated avg_word_len
-    # enough to flip is_quality near the 2..12 gate boundary
-    awl = (F.length(F.regexp_replace(t, r"\s", "")).cast("double") / n_words)
-    # case-folded whole-word counts: the ' the ' length-arithmetic form
-    # missed sentence-initial 'The' and punctuation-adjacent hits and
-    # systematically under-counted as a curation gate
-    stop_ratio = ((_word_count(t, "the") + _word_count(t, "a"))
-                  .cast("double") / n_words)
-    dlf, dwf = repetition_fractions(t)
+    n_words, awl, stop_ratio, dlf, dwf = quality_metrics(t)
     d = (docs.where(F.length(F.trim(t)) > 0)
          .withColumn("n_words", n_words)
          .withColumn("avg_word_len", F.round(awl, 6))

@@ -1,11 +1,12 @@
 """SparkSession builder with the engine's standard configuration.
 
-AQE + Arrow on, UTC session timezone (DuckDB-oracle comparability),
-shuffle partitions sized to cores (not the 200 default), Arrow batch
-rows capped so multi-KB payload rows don't blow executor memory
-(SURVEY.md section 4 'Spill/memory'), and a generated-class cache that
-holds the whole query registry, so each query's code is compiled once
-per session rather than on every run. Every entry point (jobs, bench,
+Spark's AQE defaults, Arrow on, UTC session timezone (DuckDB-oracle
+comparability), shuffle partitions sized to cores (not the 200 default),
+a file-split floor of 4 splits per core, Arrow batch rows capped so
+multi-KB payload rows don't blow executor memory (SURVEY.md section 4
+'Spill/memory'), and a generated-class cache that holds the whole query
+registry, so each query's code is compiled once per session rather than
+on every run. Every entry point (jobs, bench,
 tests) builds its session here; ``extra_conf`` overrides any setting.
 """
 
@@ -29,23 +30,18 @@ def get_spark(master: str | None = None, app_name: str = "dup_ocropy_spark",
     b = (
         SparkSession.builder.master(master).appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(DEFAULT_CONFIG.arrow_batch_rows))
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        # scan-parallelism floor (r6, guide §6.1): aim for >=4 task waves
-        # per scan instead of exactly one — split planning targets
-        # defaultParallelism splits by default, so a one-wave stage's
-        # wall is its slowest task (guide §2.6). A 4x floor amortizes
-        # task-length variance; at real scale every table yields far
-        # more splits than the floor, so it is inert there. Row-group
-        # granularity still caps effective parallelism per FILE (a
-        # single-row-group file never splits) — the bench generator
-        # writes 4x-core file counts for the same reason.
+        # split floor: Spark packs small files into splits of
+        # min(maxPartitionBytes, max(openCostInBytes, totalBytes /
+        # minPartitionNum)), minPartitionNum defaulting to the cores, so a
+        # many-small-file table scans in about one straggler-bound wave.
+        # 4x cores stops the packing: 64 one-row-group files, 333 MB
+        # (bench.py's fat-tier shape), scan as 16 splits instead of 5 at
+        # local[4], 128 instead of 32 at local[32]. It cannot split a row
+        # group: one-file tables are registry.spread_small_input's case.
         .config("spark.sql.files.minPartitionNum", str(4 * shuffle_partitions))
         # join strategy (r6, guide §3.1): let the planner pick shuffled-
         # hash over sort-merge when its size conditions hold, and let AQE

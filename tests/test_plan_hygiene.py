@@ -200,3 +200,65 @@ def test_training_plans_have_one_arrow_map_and_no_pandas_stage(spark, transcript
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert _python_nodes(plan) == {"MapInArrow": 1, "MapInPandas": 0,
                                        "BatchEvalPython": 0, "ArrowEvalPython": 0}, plan
+
+
+def _jobs_started(spark, build, group: str):
+    """(build(), number of Spark jobs started while it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan-time check")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spread_adds_one_round_robin_exchange_to_a_one_split_scan(spark):
+    from dup_ocropy_spark.operators.registry import spread_small_input
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    out, n_jobs = _jobs_started(spark, lambda: spread_small_input(df),
+                                "spread-scan")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert n_jobs == 0
+    assert plan.count("Exchange") == 1, plan
+    assert f"RoundRobinPartitioning({par})" in plan, plan
+
+
+def test_spread_leaves_a_scan_with_enough_splits_alone(spark, tmp_path):
+    from dup_ocropy_spark.operators.registry import spread_small_input
+
+    par = spark.sparkContext.defaultParallelism
+    spark.range(0, 1000, numPartitions=2 * par).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert df.rdd.getNumPartitions() >= par
+    assert spread_small_input(df) is df
+
+
+def test_spread_of_a_shuffled_frame_runs_nothing(spark):
+    """A frame that already holds an exchange (a ``table()``-spread scan,
+    an aggregate) comes back unchanged, and deciding so starts no job:
+    asking its RDD for a partition count would run its shuffle stages."""
+    from dup_ocropy_spark.operators.registry import spread_small_input, table
+
+    spread = table(spark, SF_DIR, "documents")
+    grouped = spark.read.parquet(f"{SF_DIR}/documents.parquet").groupBy("lang").count()
+    for name, df in (("table", spread), ("groupby", grouped)):
+        out, n_jobs = _jobs_started(spark, lambda: spread_small_input(df),
+                                    f"spread-{name}")
+        assert n_jobs == 0, name
+        assert out is df, name
+
+
+def test_building_the_curation_plan_runs_nothing(spark):
+    from dup_ocropy_spark.plans.cache import release_shared
+    from dup_ocropy_spark.plans.curate import curate
+    from dup_ocropy_spark.sources.transcripts import synth_transcripts
+
+    transcripts = synth_transcripts(spark, 30)
+    try:
+        _, n_jobs = _jobs_started(spark, lambda: curate(transcripts), "curate-build")
+    finally:
+        release_shared()
+    assert n_jobs == 0
