@@ -1,4 +1,4 @@
-"""Pure numpy/pyarrow kernels — no Spark imports.
+"""numpy/pyarrow kernels and one C tokenizer — no Spark imports.
 
 The single-process oracle (``kernels.oracle``) and the distributed
 pipeline (``plans.extract``) call the *same* functions, so per-turn text
@@ -7,10 +7,12 @@ Spark layer is distribution (ordering, batching, skew, resume).
 
 The extraction chain is ``extract_batch`` over one Arrow record batch:
 gates, ``segment_batch`` into one per-batch ``BlockTable``
-(struct-of-arrays), one ``classify_blocks`` and one ``reassemble`` over
-that table, both vectorized with ``pyarrow.compute``. ``extract_frame``
-is its pandas wrapper and ``extract_turn`` runs it on one turn;
-``segment_payload`` is the one-payload ``Block`` view of segmentation.
+(struct-of-arrays, filled by the C tokenizer in ``_segment.c``, which
+``cbuild`` compiles on first import), one ``classify_blocks`` and one
+``reassemble`` over that table, both vectorized with
+``pyarrow.compute``. ``extract_frame`` is its pandas wrapper and
+``extract_turn`` runs it on one turn; ``segment_payload`` is the
+one-payload ``Block`` view of segmentation.
 """
 
 from dup_ocropy_spark.kernels.textnorm import normalize_text, project_text, requote
