@@ -21,6 +21,8 @@ and ``classify_blocks`` pair.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -122,12 +124,18 @@ def extract_batch(batch: pa.RecordBatch, config: ExtractConfig = DEFAULT_CONFIG
     return pa.RecordBatch.from_arrays(arrays, names=out_names)
 
 
+_SURROGATE_RE = re.compile("[\ud800-\udfff]")
+
+
 def extract_turn(text: str | None, tool: str | None = None,
                  forced_boundaries: list[int] | None = None,
                  config: ExtractConfig = DEFAULT_CONFIG) -> dict:
     """Extract main content from one turn: ``extract_batch`` on a one-row
     batch, as a dict of the per-turn output columns (invalid payloads come
-    back with a ``reject_reason``)."""
+    back with a ``reject_reason``). A lone surrogate, which no Arrow
+    string can hold (the Spark path never sees one), becomes U+FFFD: one
+    code point for one, so spans stay offsets into ``text``."""
+    text, tool = (None if s is None else _SURROGATE_RE.sub("\ufffd", s) for s in (text, tool))
     out = extract_batch(pa.record_batch({
         "conv_id": pa.array([""]), "turn_idx": pa.array([0], pa.int32()),
         "text": pa.array([text], pa.string()), "tool": pa.array([tool], pa.string()),

@@ -185,6 +185,16 @@ _SHINGLES_SQL = f"""
 """
 
 
+def shingle_positions(text):
+    """array<int> of the 1-based start of each SHINGLE_LEN-char window of
+    ``text``: every SHINGLE_STRIDE-th position plus the final window,
+    each position once (the tail position can coincide with a stride
+    point). The one position rule of the batch and streaming shingles."""
+    last = F.greatest(F.length(text) - F.lit(SHINGLE_LEN - 1), F.lit(1))
+    return F.array_distinct(F.concat(
+        F.sequence(F.lit(1), last, F.lit(SHINGLE_STRIDE)), F.array(last)))
+
+
 def shingles_of(d: DataFrame) -> DataFrame:
     """Positional char shingles per doc (JVM-side: sequence + explode +
     substring, no Python). Input: (doc_id, text). May carry per-doc
@@ -202,14 +212,11 @@ def shingles_of(d: DataFrame) -> DataFrame:
     leaves up to stride-1 tail chars uncovered, so two docs differing
     only in the tail would compare as identical shingle sets (the stream
     gate hit this as real data loss; the batch estimate just lost
-    fidelity). The DuckDB twin unions the same tail window. The
-    ``array_distinct`` below keeps POSITIONS unique (the tail position
-    can coincide with a stride point), not shingle values."""
+    fidelity). The DuckDB twin unions the same tail window.
+    Positions are unique (``shingle_positions``), shingle values need
+    not be."""
     d = spread_small_input(d)
-    last = F.greatest(F.length("text") - F.lit(SHINGLE_LEN - 1), F.lit(1))
-    pos = F.explode(F.array_distinct(F.concat(
-        F.sequence(F.lit(1), last, F.lit(SHINGLE_STRIDE)),
-        F.array(last)))).alias("p")
+    pos = F.explode(shingle_positions(F.col("text"))).alias("p")
     return (d.select("doc_id", "text", pos)
             .select("doc_id", F.substring(F.col("text"), F.col("p").cast("int"), SHINGLE_LEN)
                     .alias("sh")))

@@ -9,6 +9,8 @@ the same banding pattern as MinHash dedup.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
@@ -82,6 +84,93 @@ def cosine_topk(e: DataFrame, n_queries: int = N_QUERIES,
 
 
 # ---------------------------------------------------------------------------
+# The projection kernel: embedding x a small literal matrix (LSH planes,
+# IVF centroids). One implementation for every caller: a mapInArrow stage
+# for the Spark paths, the same numpy helper for both quantizer trainers.
+# ---------------------------------------------------------------------------
+
+# Rows per gemm. Every dot is taken inside a zero-padded block of exactly
+# this many rows, so a row's dots are the same bits in whatever batch it
+# arrives (a whole-batch X @ M.T is not: BLAS picks its kernel by shape).
+_BLOCK = 64
+
+
+def _block_dots(X: np.ndarray, M: np.ndarray, reduce) -> np.ndarray:
+    """``reduce(X @ M.T)``, one fixed ``_BLOCK``-row zero-padded block at a
+    time. ``reduce`` gets each block's own dots (free to overwrite), so
+    the whole product is never held (32k cells x 10k rows: 2.5 GB)."""
+    mt = np.ascontiguousarray(M.T, dtype=np.float64)
+    pad = np.zeros((_BLOCK, X.shape[1]))
+    out = [reduce(np.zeros((0, len(M))))]  # an empty X keeps reduce's shape
+    for s in range(0, len(X), _BLOCK):
+        blk = X[s:s + _BLOCK]
+        pad[:len(blk)] = blk
+        pad[len(blk):] = 0.0
+        out.append(reduce((pad @ mt)[:len(blk)]))
+    return np.concatenate(out)
+
+
+def _top(m: int):
+    """Reducer: each row's ``m`` cells by descending dot, ties to the
+    smaller cell id, as ``m`` rounds of ``argmax`` (the first maximum)
+    that mask the cell taken: m*k per row (a sort is ~10x the gemm at 32k)."""
+    def top(d):
+        out = np.empty((len(d), m), dtype=np.int64)
+        for i in range(m):
+            out[:, i] = d.argmax(axis=1)
+            d[np.arange(len(d)), out[:, i]] = -np.inf
+        return out
+    return top
+
+
+def _embedding_matrix(col: pa.Array, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, X): the rows of a list<float> column that hold ``width``
+    finite values, and those rows as an (n, width) float64 matrix read
+    from the flattened values (no per-row conversion). A null embedding,
+    another width, or a null/NaN/inf element leaves the row out."""
+    widths = pc.list_value_length(col).fill_null(0).to_numpy()
+    rows = np.flatnonzero(widths == width)
+    X = (pc.list_flatten(col.take(rows)).to_numpy(zero_copy_only=False)
+         .astype(np.float64).reshape(len(rows), width))
+    ok = np.isfinite(X).all(axis=1)
+    return rows[ok], X[ok]
+
+
+def _project(col: pa.Array, matrix, reduce, m: int) -> pa.ListArray:
+    """The kernel over one batch's embedding column: the rows of each
+    width ``d`` meet ``matrix(d)`` through ``_block_dots``; ``m`` ints per
+    row, null where ``_embedding_matrix`` leaves it out or ``matrix(d)``
+    is None."""
+    out = np.zeros((len(col), m), dtype=np.int32)
+    valid = np.zeros(len(col), dtype=bool)
+    widths = pc.list_value_length(col).fill_null(0).to_numpy()
+    for d in np.unique(widths[widths > 0]).tolist():
+        M = matrix(d)
+        if M is not None:
+            rows, X = _embedding_matrix(col, d)
+            out[rows] = _block_dots(X, M, reduce)
+            valid[rows] = True
+    offsets = np.concatenate([[0], np.cumsum(valid * m)]).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(out[valid].reshape(-1)),
+                                    mask=pa.array(~valid))
+
+
+def _projection_stage(emb: DataFrame, name: str, matrix, reduce, m: int) -> DataFrame:
+    """(vec_id, embedding, ``name`` array<int>): ``_project`` over each
+    Arrow batch's embedding column, in one mapInArrow."""
+    t = {f.name: f.dataType.simpleString() for f in emb.schema.fields}
+    schema = f"vec_id {t['vec_id']}, embedding {t['embedding']}, {name} array<int>"
+
+    def stage(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), b.column(1), _project(b.column(1), matrix, reduce, m)],
+                names=["vec_id", "embedding", name])
+
+    return emb.select("vec_id", "embedding").mapInArrow(stage, schema)
+
+
+# ---------------------------------------------------------------------------
 # LSH-bucketed ANN (scale path; rows-only — hyperplanes are engine-internal)
 # ---------------------------------------------------------------------------
 
@@ -97,48 +186,28 @@ LSH_SEED = 42
 
 
 def _hyperplanes(dim: int) -> np.ndarray:
+    """The (N_TABLES * PLANES_PER_TABLE, dim) planes for one width: seeded,
+    so every batch and every worker projects a width on the same planes."""
     rng = np.random.default_rng(LSH_SEED)
-    return rng.standard_normal((N_TABLES, PLANES_PER_TABLE, dim))
+    return rng.standard_normal((N_TABLES * PLANES_PER_TABLE, dim))
 
 
-def embedding_dim(emb: DataFrame, default: int = 64) -> int:
-    """Embedding width from the first non-null row (bounded: a single
-    head() probe). The former hardcoded dim=64 silently mis-bucketed any
-    other width — zip_with null-pads the shorter side, so every
-    hyperplane dot went null (VERDICT r5 minor). An empty or all-null
-    table falls back to ``default`` so plan CONSTRUCTION stays graceful
-    (the query then returns 0 rows, the pre-r6 behavior) instead of
-    raising before any action runs."""
-    row = (emb.where(F.col("embedding").isNotNull())
-           .select(F.size("embedding").alias("d")).head())
-    if row is None or row["d"] is None or row["d"] <= 0:
-        return default
-    return int(row["d"])
+def _sign_buckets(dots: np.ndarray) -> np.ndarray:
+    """Reducer: per row, N_TABLES buckets; plane p of a table sets bit p
+    when the row's dot with it is >= 0."""
+    signs = (dots >= 0).reshape(len(dots), N_TABLES, PLANES_PER_TABLE)
+    return (signs * (1 << np.arange(PLANES_PER_TABLE))).sum(axis=2)
 
 
-def lsh_bucket_ids(emb: DataFrame, dim: int | None = None) -> DataFrame:
-    """(vec_id, embedding, lsh_table, bucket) with one row per table:
-    sign-pattern of dot products with literal random hyperplanes, computed
-    JVM-side (zip_with + aggregate) — no Python, no shuffle. ``dim`` is
-    inferred from the data when not given (identical hyperplanes for the
-    64-wide driver tables; a 32-dim table now buckets correctly instead
-    of silently hashing null dots)."""
-    planes = _hyperplanes(dim if dim is not None else embedding_dim(emb))
-    tables = []
-    for t in range(N_TABLES):
-        bucket = F.lit(0)
-        for p in range(PLANES_PER_TABLE):
-            dot = F.aggregate(
-                F.zip_with(F.col("embedding"),
-                           F.array(*[F.lit(float(w)) for w in planes[t, p]]),
-                           lambda x, y: x.cast("double") * y),
-                F.lit(0.0), lambda acc, x: acc + x)
-            bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        tables.append(F.struct(F.lit(t).alias("lsh_table"), bucket.alias("bucket")))
-    return (emb.select("vec_id", "embedding", F.explode(F.array(*tables)).alias("tb"))
+def lsh_bucket_ids(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, lsh_table, bucket) with one row per table: the
+    sign pattern of the row's dots with the hyperplanes of its own width,
+    from the projection kernel; the bucket array is exploded JVM-side. A
+    null or unreadable embedding keeps one row with a null table and
+    bucket, which joins nothing."""
+    return (_projection_stage(emb, "buckets", _hyperplanes, _sign_buckets, N_TABLES)
             .select("vec_id", "embedding",
-                    F.col("tb.lsh_table").alias("lsh_table"),
-                    F.col("tb.bucket").alias("bucket")))
+                    F.posexplode_outer("buckets").alias("lsh_table", "bucket")))
 
 
 @register(
@@ -155,13 +224,16 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lsh_topk(e: DataFrame, n_queries: int = N_QUERIES,
              top_k: int = TOP_K) -> DataFrame:
-    with_b = lsh_bucket_ids(e)
-    q = (with_b.where(F.col("vec_id") < n_queries)
+    corpus = lsh_bucket_ids(e)
+    q = (lsh_bucket_ids(e.where(F.col("vec_id") < n_queries))
          .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
                  F.col("lsh_table").alias("qt"), F.col("bucket").alias("qb")))
+    # equal widths: each width has planes of its own, so a bucket id only
+    # means the same region of space between rows of one width
     cand = (F.broadcast(q)  # bounded: N_QUERIES x N_TABLES rows
-            .join(with_b, (F.col("qt") == F.col("lsh_table"))
+            .join(corpus, (F.col("qt") == F.col("lsh_table"))
                   & (F.col("qb") == F.col("bucket"))
+                  & (F.size("qe") == F.size("embedding"))
                   & (F.col("query_id") != F.col("vec_id")))
             .select("query_id", "qe", "vec_id", "embedding")
             .dropDuplicates(["query_id", "vec_id"]))
@@ -174,13 +246,10 @@ def lsh_topk(e: DataFrame, n_queries: int = N_QUERIES,
 
 # ---------------------------------------------------------------------------
 # IVF ANN (inverted-file index): the second scale path, complementary to
-# sign-projection LSH. A coarse quantizer (k-means over a BOUNDED driver
-# sample — the standard IVF training pattern) partitions the corpus into k
-# cells; queries probe the nprobe nearest cells only. Assignment is pure
-# JVM (dot products against literal centroid arrays), so the corpus-side
-# pass is one codegen stage + one shuffle on cell id. Registered rows-only
-# (ann_ivf_topk); recall gated in tests/test_recall_gates.py like the LSH
-# paths.
+# sign-projection LSH. A k-means coarse quantizer partitions the corpus
+# into k cells; queries probe the nprobe nearest cells only. Assignment and
+# the probe are the projection kernel against the centroid matrix.
+# Registered rows-only (ann_ivf_topk); recall gated in test_recall_gates.
 # ---------------------------------------------------------------------------
 
 IVF_K = 16
@@ -192,47 +261,29 @@ IVF_ITERS = 8
 _NORM_FLOOR = 1e-150
 
 
-def ivf_train_centroids(emb, dim: int | None = None, k: int = IVF_K,
-                        sample: int = IVF_SAMPLE, iters: int = IVF_ITERS,
-                        seed: int = LSH_SEED) -> np.ndarray:
-    """Seeded k-means quantizer. Two regimes (r6, VERDICT r5 'What's
-    wrong' #1 — the old code silently capped the centroid count at the
-    sample size, so sqrt(n) cells stopped scaling past n ~ 1M and the
-    per-cell pair matmul went quadratic exactly where SemDeDup linearity
-    was claimed):
+def ivf_train_centroids(emb, k: int = IVF_K, sample: int = IVF_SAMPLE,
+                        iters: int = IVF_ITERS, seed: int = LSH_SEED) -> np.ndarray:
+    """Seeded k-means quantizer, in one of two regimes:
 
-    * ``k <= sample`` — bounded-driver-sample k-means, byte-identical to
-      the pre-r6 path (collect capped at ``sample`` rows; this is
-      quantizer TRAINING, not a data pass).
+    * ``k <= sample`` — k-means over a bounded driver sample (collect
+      capped at ``sample`` rows; this is quantizer TRAINING, not a data
+      pass).
     * ``k > sample`` — distributed re-estimation
-      (``_ivf_train_distributed``): deterministic hash-ordered init of
-      exactly k centroids, then per-iteration Arrow-matmul assignment +
-      per-cell mean, with only (k x dim) statistics ever reaching the
-      driver. Guarantees ``len(C) == k`` or raises.
+      (``_ivf_train_distributed``), with only (k x dim) statistics ever
+      reaching the driver: sqrt(n) cells must keep scaling past n ~ 1M,
+      where a sample-capped k would make the per-cell pair matmul
+      quadratic.
 
-    ``dim`` is unused (kept for API compatibility; the width comes from
-    the data). The driver-path sample is the ``sample`` rows with
-    smallest xxhash64(vec_id, seed): a deterministic uniform draw that is
-    independent of the on-disk row order, unlike a bare ``limit()`` which
-    takes the first partitions — on a sorted/clustered corpus that trains
-    the quantizer on one region of the space and collapses cell balance
-    (and is not even guaranteed deterministic across partitionings).
-    orderBy+limit compiles to TakeOrdered (per-partition top-k, no global
-    sort shuffle)."""
+    Either way ``len(C) == k`` or it raises. The sample is the
+    ``sample`` non-null rows with smallest xxhash64(vec_id, seed), less
+    unreadable ones (``_sample_matrix``): a deterministic uniform draw
+    independent of the on-disk row order (a bare ``limit()`` takes the
+    first partitions: on a clustered corpus, one region of the space)."""
     if k > sample:
         return _ivf_train_distributed(emb, k, iters, seed)
-    rows = (emb.select("vec_id", "embedding")
-            # vec_id tie-break: a hash collision at the limit boundary must
-            # not make the sample partitioning-dependent (CLAUDE.md
-            # invariant: every top-k orderBy ends in a unique column)
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), "vec_id")
-            .limit(sample).toPandas()["embedding"].tolist())
-    X = np.asarray([np.asarray(r, dtype=float) for r in rows])
+    X = _sample_matrix(emb, seed, sample)
     if len(X) < k:
-        # k <= sample here, so len(X) < k means the CORPUS has fewer
-        # than k vectors: the old silent min(k, n)-centroid cap is loud
-        # in both training regimes now (auto-derived k clamps to n in
-        # _ivf_cell_count and never trips this)
+        # auto-derived k clamps to n in _ivf_cell_count and never trips this
         raise ValueError(
             f"IVF k={k} exceeds corpus size {len(X)}: cannot train that "
             f"many cells (pass an explicit smaller k)")
@@ -240,7 +291,7 @@ def ivf_train_centroids(emb, dim: int | None = None, k: int = IVF_K,
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
     for _ in range(iters):
-        assign = (X @ C.T).argmax(axis=1)          # unit vectors: max dot
+        assign = _block_dots(X, C, _top(1))[:, 0]  # unit vectors: max dot
         for j in range(len(C)):
             members = X[assign == j]
             if len(members):
@@ -249,32 +300,41 @@ def ivf_train_centroids(emb, dim: int | None = None, k: int = IVF_K,
     return C
 
 
+def _trainable(emb: DataFrame) -> DataFrame:
+    return emb.select("vec_id", "embedding").where(F.col("embedding").isNotNull())
+
+
+def _sample_matrix(emb: DataFrame, seed: int, n: int) -> np.ndarray:
+    """The ``n`` trainable rows with smallest xxhash64(vec_id, seed) (the
+    vec_id tie-break keeps a hash collision at the limit from making the
+    draw partitioning-dependent), read as the kernel reads a batch at the
+    sample's most common width: other widths and non-finite rows stay out."""
+    col = (_trainable(emb).orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), "vec_id")
+           .limit(n).select("embedding").toArrow().column(0).combine_chunks())
+    widths = pc.list_value_length(col).fill_null(0).to_numpy()
+    return _embedding_matrix(col, int(np.bincount(widths, minlength=2)[1:].argmax()) + 1)[1]
+
+
 def _ivf_train_distributed(emb, k: int, iters: int = IVF_ITERS,
                            seed: int = LSH_SEED) -> np.ndarray:
     """k-means re-estimation off the driver, for cell counts beyond any
     sane driver sample (k = sqrt(n) > 1024 ⇔ n > ~1M vectors).
 
-    Init: the k rows with smallest xxhash64(vec_id, seed) — the same
-    deterministic draw rule as the sampled path; raises if the corpus has
-    fewer than k vectors (the old silent cap is now loud). Each
-    iteration: one Arrow-batched matmul assignment pass over the corpus
-    (``X @ C.T`` per batch, the ivf_assign_multi pattern with m=1)
+    Init: the k rows ``_sample_matrix`` draws (raises if the corpus has
+    fewer than k vectors). Each iteration: one mapInArrow assignment
+    pass over the corpus (``_block_dots``, as ``ivf_assign`` with m=1)
     emitting per-task per-cell partial sums (≤ k rows per task), merged
     JVM-side per cell (collect_list + element-wise zip_with aggregate —
     at most one vector per task per cell in each group), so only the
-    (k x dim) statistics table ever reaches the driver (~16 MB at the
-    docstring's 32k cells). Empty cells keep their previous centroid.
+    (k x dim) statistics table ever reaches the driver (~16 MB at 32k
+    cells). Empty cells keep their previous centroid.
 
-    Determinism note: assignment is seeded-deterministic, but the
+    Determinism note: assignment is batch-invariant, but the
     floating-point partial-sum merge order follows shuffle arrival, so
-    centroids are reproducible only up to float-sum reassociation —
-    acceptable for a >1M-vector quantizer (no declared query reaches this
-    regime at driver scales; recall/occupancy are gated in tests, which
+    centroids are reproducible only up to float-sum reassociation (no
+    declared query reaches this regime at driver scales; the tests
     tolerate ulp-level drift)."""
-    init = (emb.select("vec_id", "embedding")
-            .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), "vec_id")
-            .limit(k).toPandas()["embedding"].tolist())
-    C = np.asarray([np.asarray(r, dtype=float) for r in init])
+    C = _sample_matrix(emb, seed, k)
     if len(C) < k:
         raise ValueError(
             f"IVF k={k} exceeds corpus size {len(C)}: cannot train that "
@@ -286,26 +346,22 @@ def _ivf_train_distributed(emb, k: int, iters: int = IVF_ITERS,
         bc = sc.broadcast(C)
 
         def partials(batches):
-            ct = bc.value.T
-            kk = ct.shape[1]
-            sums = np.zeros((kk, ct.shape[0]), dtype=np.float64)
-            counts = np.zeros(kk, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.asarray([np.asarray(v, dtype=np.float64)
-                                for v in pdf["embedding"]])
-                assign = (X @ ct).argmax(axis=1)
+            Cb = bc.value
+            sums = np.zeros_like(Cb)
+            counts = np.zeros(len(Cb), dtype=np.int64)
+            for b in batches:
+                _, X = _embedding_matrix(b.column(0), dim)
+                assign = _block_dots(X, Cb, _top(1))[:, 0]
                 np.add.at(sums, assign, X)
                 np.add.at(counts, assign, 1)
             hit = np.flatnonzero(counts)
-            yield pd.DataFrame({
-                "cell": hit.astype("int32"),
-                "cnt": counts[hit],
-                "vec": [sums[j].tolist() for j in hit],
-            })
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(hit, pa.int32()), pa.array(counts[hit]),
+                 pa.ListArray.from_arrays(pa.array(np.arange(len(hit) + 1, dtype=np.int32) * dim),
+                                          pa.array(sums[hit].reshape(-1)))],
+                names=["cell", "cnt", "vec"])
 
-        stats = emb.select("embedding").mapInPandas(
+        stats = emb.select("embedding").mapInArrow(
             partials, schema="cell int, cnt long, vec array<double>")
         merged = (stats.groupBy("cell")
                   .agg(F.sum("cnt").alias("cnt"),
@@ -324,31 +380,29 @@ def _ivf_train_distributed(emb, k: int, iters: int = IVF_ITERS,
     return C
 
 
-def _cell_dots(centroids: np.ndarray):
-    """array<double> of dot(embedding, centroid_j) for each cell, JVM-side."""
-    return F.array(*[
-        F.aggregate(
-            F.zip_with(F.col("embedding"),
-                       F.array(*[F.lit(float(w)) for w in c]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        for c in centroids
-    ])
-
-
-def ivf_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """(vec_id, embedding, cell): nearest-centroid cell id, pure JVM."""
-    dots = _cell_dots(centroids)
-    return emb.select(
-        "vec_id", "embedding",
-        (F.array_position(dots, F.array_max(dots)) - 1).cast("int").alias("cell"))
+def ivf_assign(emb: DataFrame, centroids: np.ndarray, m: int = 1) -> DataFrame:
+    """(vec_id, embedding, cell): one row per vector and each of its ``m``
+    nearest cells by dot (descending, ties to the smaller cell id), from
+    the projection kernel. ``m > 1`` is soft assignment: near-identical
+    vectors have near-identical centroid dots, so a near-dup pair split
+    across a cell boundary still shares one of its top-m cells with high
+    probability — the standard boundary fix for cell-bucketed pairing.
+    A vector whose embedding is null, holds a null/NaN/inf element or is
+    not the centroids' width keeps one row with a null cell, which joins
+    nothing."""
+    C = np.asarray(centroids, dtype=np.float64)
+    m = min(m, len(C))
+    return (_projection_stage(emb, "cells", lambda d: C if d == C.shape[1] else None,
+                              _top(m), m)
+            .select("vec_id", "embedding", F.explode_outer("cells").alias("cell")))
 
 
 @register(
     "ann_ivf_topk",
     sql=None,
     doc="IVF ANN: seeded k-means coarse quantizer trained on a bounded "
-        "hash-ordered sample, pure-JVM cell assignment, nprobe=3 "
+        "hash-ordered sample, cell assignment and the query probe by one "
+        "batch-invariant Arrow matmul kernel, nprobe=3 "
         "cell-local candidate join, exact cosine rerank — the "
         "clustered-index scale path complementary to sign-projection "
         "LSH. Non-SQL (iterative quantizer training); recall vs the "
@@ -366,20 +420,10 @@ def ivf_topk_of(e: DataFrame, nprobe: int = IVF_NPROBE,
                 n_queries: int = N_QUERIES, top_k: int = TOP_K) -> DataFrame:
     """Exact-rerank IVF ANN: queries probe their nprobe nearest cells."""
     C = ivf_train_centroids(e)
-    corpus = ivf_assign(e, C)
-    dots = _cell_dots(C)
-    probe = F.slice(F.transform(
-        F.array_sort(F.zip_with(dots,
-                                F.sequence(F.lit(0), F.lit(len(C) - 1)),
-                                lambda d, i: F.struct((-d).alias("negd"),
-                                                      i.alias("cell")))),
-        lambda s: s["cell"]), 1, nprobe)
-    q = (e.where(F.col("vec_id") < n_queries)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qe"),
-                 F.explode(probe.cast("array<int>")).alias("cell")))
+    q = (ivf_assign(e.where(F.col("vec_id") < n_queries), C, m=nprobe)
+         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "cell"))
     cand = (F.broadcast(q)  # bounded: N_QUERIES x nprobe rows
-            .join(corpus, "cell")
+            .join(ivf_assign(e, C), "cell")
             .where(F.col("query_id") != F.col("vec_id")))
     cos = F.round(_cosine(F.col("qe"), F.col("embedding")), 4)
     scored = cand.select("query_id", "vec_id", cos.alias("cos"))
@@ -388,55 +432,12 @@ def ivf_topk_of(e: DataFrame, nprobe: int = IVF_NPROBE,
                  .where(F.col("rk") <= top_k).drop("rk")
 
 
-def ivf_assign_multi(emb: DataFrame, centroids: np.ndarray,
-                     m: int = 2) -> DataFrame:
-    """(vec_id, embedding, nrm, cell) with each vector fanned out to its m
-    NEAREST cells (soft assignment). Near-identical vectors have
-    near-identical centroid dots, so a near-dup pair split across a cell
-    boundary still shares at least one of its top-m cells with high
-    probability — the standard boundary fix for cell-bucketed pairing.
-    ``nrm`` is the unrounded L2 norm, computed once per vector for the
-    pair stage's cosine denominators.
-
-    One Arrow-batched mapInPandas (X @ C.T per batch, stable argsort so
-    a dot tie picks the smaller cell id), not a JVM expression: k
-    centroids as literal-array aggregates means k*dim interpreted HOF
-    ops per row PLUS a k*dim-literal expression tree that analysis and
-    interpreted eval both chew on — measured ~1.1 s for 2k vectors at
-    k=44 vs milliseconds for the batched matmul. HOFs never enter
-    whole-stage codegen, so the JVM form's cost scales with k while the
-    Arrow form amortizes to one gemm per batch."""
-    m_top = m
-    ct = centroids.T.copy()
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in pdf["embedding"]])
-            nrm = np.sqrt((X * X).sum(axis=1))
-            order = np.argsort(-(X @ ct), axis=1, kind="stable")[:, :m_top]
-            out = pdf.loc[pdf.index.repeat(m_top),
-                          ["vec_id", "embedding"]].reset_index(drop=True)
-            out["nrm"] = np.repeat(nrm, m_top)
-            out["cell"] = order.reshape(-1).astype("int32")
-            yield out
-
-    fields = {f.name: f.dataType.simpleString() for f in emb.schema.fields}
-    schema = (f"vec_id {fields['vec_id']}, embedding {fields['embedding']}, "
-              "nrm double, cell int")
-    return emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-
-
 def _ivf_cell_count(n_vecs: int, k: int | None) -> int:
     """Cell count for the pair-bucketing paths: explicit ``k`` wins;
     default scales as sqrt(n) (the SemDeDup regime — per-cell candidate
-    count stays ~sqrt(n), so the per-cell pair work is ~n total instead
-    of n^2/k with a fixed k; at 1e9 vectors that is ~32k cells, each a
-    small local matmul), clamped to the corpus size so a degenerate
-    tiny corpus keeps working (the trainer is loud for k > n; an
-    auto-derived k must not trip that)."""
+    count stays ~sqrt(n), so the per-cell pair work is ~n total; at 1e9
+    vectors that is ~32k cells), clamped to the corpus size so a tiny
+    corpus keeps working (the trainer is loud for k > n)."""
     if k is not None:
         return k
     return max(1, min(n_vecs, max(IVF_K, int(np.sqrt(n_vecs)))))
@@ -449,7 +450,9 @@ def _cell_pairs(assigned: DataFrame, threshold: float | None,
     the literal SemDeDup within-cluster similarity matmul). With
     sqrt(n) cells the expected group is ~sqrt(n) rows, so per-group work
     is ~n and total pair volume ~n * m^2. ``threshold`` filters inside
-    the kernel so only true near-dup rows leave the Python worker.
+    the kernel so only true near-dup rows leave the Python worker. A row
+    with a null cell (``ivf_assign``'s unreadable embeddings) never
+    enters a group.
 
     Trade-off vs a cell equi-join: a join's skewed cell is
     AQE-splittable, while a pathological quantizer cell here becomes one
@@ -470,7 +473,7 @@ def _cell_pairs(assigned: DataFrame, threshold: float | None,
         # floored norm: a zero vector scores cos 0 instead of 0/0 = NaN,
         # which would sort above every real cos in the np.partition prune
         # below and drop the cell's pairs; real norms sit far above it
-        nr = np.maximum(pdf["nrm"].to_numpy(), _NORM_FLOOR)
+        nr = np.maximum(np.sqrt((X * X).sum(axis=1)), _NORM_FLOOR)
         cos = (X @ X.T) / np.outer(nr, nr)
         iu, ju = np.triu_indices(n, k=1)
         ids = pdf["vec_id"].to_numpy()
@@ -499,14 +502,12 @@ def _cell_pairs(assigned: DataFrame, threshold: float | None,
             out = out[out["cos"] >= v - 1.5e-4]
         return out
 
-    raw = assigned.groupBy("cell").applyInPandas(
+    raw = assigned.where(F.col("cell").isNotNull()).groupBy("cell").applyInPandas(
         pairs, f"doc_a {id_t}, doc_b {id_t}, cos double")
-    # rounding moved JVM-side (r6, ADVICE r5): the kernel's np.round is
-    # HALF_EVEN while the exact-baseline path (_cosine + F.round) and the
-    # DuckDB twins round HALF_UP — a cosine landing exactly on a 5e-5
-    # boundary differed between the bucketed and exact paths. F.round here
-    # makes both paths share one rounding authority (and still collapses
-    # gemm ulp noise before the downstream distinct/dropDuplicates).
+    # rounding is JVM-side: F.round is HALF_UP like the exact path
+    # (_cosine + F.round) and the DuckDB twins, where np.round is
+    # HALF_EVEN; it also collapses gemm ulp noise before the downstream
+    # distinct/dropDuplicates
     out = raw.select("doc_a", "doc_b", F.round("cos", 4).alias("cos"))
     if threshold is not None:
         out = out.where(F.col("cos") >= threshold)
@@ -521,8 +522,8 @@ def embedding_neardup_pairs(e: DataFrame, threshold: float = 0.9,
     (SemDeDup-style: Abbas et al. 2023 dedup within k-means clusters).
 
     Shape: quantizer trained on a seeded bounded sample; every vector
-    soft-assigned to its ``m_assign`` nearest cells (one Arrow-batched
-    matmul); sqrt(n) cells by default so per-cell candidate sets stay
+    soft-assigned to its ``m_assign`` nearest cells (``ivf_assign``, the
+    projection kernel); sqrt(n) cells by default so per-cell candidate sets stay
     ~sqrt(n); the pair stage is one shuffle on cell id + one vectorized
     X @ X.T per cell (``_cell_pairs``), never across the whole corpus,
     with the threshold applied inside the kernel so only near-dup rows
@@ -531,9 +532,9 @@ def embedding_neardup_pairs(e: DataFrame, threshold: float = 0.9,
     near-dup pair is missed only when the two vectors share none of
     their top-m cells). Feeds ``dedup.dedup_clusters`` for transitive
     closure like the text-based pair sources."""
-    k = _ivf_cell_count(e.count(), k)
+    k = _ivf_cell_count(_trainable(e).count(), k)
     C = ivf_train_centroids(e, k=k)
-    return (_cell_pairs(ivf_assign_multi(e, C, m_assign), threshold=threshold)
+    return (_cell_pairs(ivf_assign(e, C, m_assign), threshold=threshold)
             .distinct())  # a pair may co-occur in up to m_assign cells
 
 
@@ -549,7 +550,7 @@ def embedding_neardup_pairs(e: DataFrame, threshold: float = 0.9,
     doc="SemDeDup-shaped semantic near-dup, bucketed: IVF quantizer "
         "(seeded k-means on a bounded hash-ordered sample; distributed "
         "re-estimation past k=1024), every vector soft-assigned to its 2 "
-        "nearest cells (one Arrow-batched matmul), pair join "
+        "nearest cells (the batch-invariant Arrow matmul kernel), pair join "
         "runs PER CELL — never all-pairs — then global top-25 nearest "
         "pairs by exact cosine with the (doc_a, doc_b) tie-break. Top-k "
         "rather than a threshold cut so the driver always checks real "
@@ -571,14 +572,10 @@ def semantic_topk_pairs(e: DataFrame, m_assign: int = 2,
     non-empty on corpora with no true near-dups.
 
     ``k=None`` scales the cell count as sqrt(n) (``_ivf_cell_count``),
-    keeping the per-cell pair join ~linear in corpus size. Cells are
-    recomputed for each join side instead of persisted — two codegen
-    passes of centroid dots beat holding executor-memory residency for a
-    one-shot query (the persisting variant is ``embedding_neardup_pairs``,
-    whose caller owns the release)."""
-    k = _ivf_cell_count(e.count(), k)
+    keeping the per-cell pair join ~linear in corpus size."""
+    k = _ivf_cell_count(_trainable(e).count(), k)
     C = ivf_train_centroids(e, k=k)
-    return (_cell_pairs(ivf_assign_multi(e, C, m_assign), threshold=None,
+    return (_cell_pairs(ivf_assign(e, C, m_assign), threshold=None,
                         local_top=top_n)
             # a pair may co-occur in up to m_assign cells with the SAME
             # cos: dedup before ranking or top-k emits duplicate rows

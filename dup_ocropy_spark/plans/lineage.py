@@ -14,9 +14,6 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-LINEAGE_SCHEMA = ("partition_file string, row_count bigint, checksum bigint, "
-                  "source_snapshot string, wall_ms bigint")
-
 # columns that define row identity for checksumming
 _ID_COLS = ("conv_id", "turn_idx", "extracted_text")
 

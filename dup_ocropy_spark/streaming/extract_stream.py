@@ -158,14 +158,11 @@ def _stream_shingles(payload):
     """Per-row shingle array (JVM, no aggregation): stride positions with
     the final window always included, so the payload TAIL is covered (a
     bare stride sequence decides length-21..29 payloads entirely by their
-    first 20 chars). Mirrors batch ``shingles_of``."""
-    from dup_ocropy_spark.operators.dedup import SHINGLE_LEN, SHINGLE_STRIDE
+    first 20 chars). Built from batch ``shingles_of``'s own
+    ``shingle_positions``."""
+    from dup_ocropy_spark.operators.dedup import SHINGLE_LEN, shingle_positions
 
-    last = F.greatest(F.length(payload) - F.lit(SHINGLE_LEN - 1), F.lit(1))
-    positions = F.array_distinct(F.concat(
-        F.sequence(F.lit(1), last, F.lit(SHINGLE_STRIDE)),
-        F.array(last)))
-    return F.transform(positions,
+    return F.transform(shingle_positions(payload),
                        lambda p: F.substring(payload, p, F.lit(SHINGLE_LEN)))
 
 

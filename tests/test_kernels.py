@@ -295,6 +295,26 @@ def test_extract_batch_passes_null_turn_idx_through():
     assert out.column("reject_reason").to_pylist() == [None, None, "empty"]
 
 
+@pytest.mark.parametrize("text,tool", [
+    ("abc\ud800def ghi jkl mno pqr stu vwx", None),
+    ("<p>one \udfff two three four five six seven</p><p>😀 eight nine</p>", None),
+    (None, "tool \udc80 payload that is long enough"),
+])
+def test_extract_turn_maps_lone_surrogates_to_replacement_char(text, tool):
+    """A lone surrogate (no Arrow string can hold one) is extracted as
+    U+FFFD, one code point for one, so spans index the original text."""
+    def fix(s):
+        return None if s is None else "".join(
+            "\ufffd" if 0xD800 <= ord(c) <= 0xDFFF else c for c in s)
+
+    got = extract_turn(text, tool=tool)
+    assert got == extract_turn(fix(text), tool=fix(tool))
+    assert got["reject_reason"] is None and "\ufffd" in got["extracted_text"]
+    payload = text if tool is None else tool
+    assert got["payload_len"] == len(payload)
+    assert all(s["end"] <= len(payload) for s in got["spans"])
+
+
 def test_self_closing_anchor_does_not_poison_link_density():
     """'<a href="#"/>' must not leave a_depth permanently open: with the
     greedy attr regex the trailing '/' lands in the attribute group, and

@@ -117,12 +117,29 @@ def _ast_names(tree: ast.AST):
             yield node.name.rsplit(".", 1)[-1]
 
 
+def _top_level_defs(tree: ast.Module):
+    """(name, node) for each top-level definition of a module: functions
+    and classes without a decorator, and every name an assignment binds
+    (dunders such as ``__all__`` excepted)."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not node.decorator_list:
+                yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        yield n.id, node
+
+
 def test_every_package_function_is_referenced():
-    """Every top-level function or class in the package must be named
-    somewhere outside its own definition — in the package, the jobs, the
-    tests, the benchmark or the entry points — so no helper survives that
-    nothing calls. A decorated definition counts as reached through its
-    decorator (``@register`` puts every registry query in the registry)."""
+    """Every top-level function, class or assigned name in the package
+    must be named somewhere outside its own definition — in the package,
+    the jobs, the tests, the benchmark or the entry points — so no helper
+    or constant survives that nothing reads. A decorated definition
+    counts as reached through its decorator (``@register`` puts every
+    registry query in the registry)."""
     files = [*sorted((_ROOT / "dup_ocropy_spark").rglob("*.py")),
              *sorted((_ROOT / "jobs").glob("*.py")),
              *sorted((_ROOT / "tests").rglob("*.py")),
@@ -135,14 +152,11 @@ def test_every_package_function_is_referenced():
         for name in _ast_names(tree):
             counts[name] = counts.get(name, 0) + 1
         if f.is_relative_to(_ROOT / "dup_ocropy_spark"):
-            defs += [(f, node) for node in tree.body
-                     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                          ast.ClassDef))
-                     and not node.decorator_list]
+            defs += [(f, name, node) for name, node in _top_level_defs(tree)]
     unreferenced = [
-        f"{f.relative_to(_ROOT)}:{node.name}" for f, node in defs
-        if counts.get(node.name, 0) == sum(1 for n in _ast_names(node) if n == node.name)]
-    assert not unreferenced, f"functions nothing names: {unreferenced}"
+        f"{f.relative_to(_ROOT)}:{name}" for f, name, node in defs
+        if counts.get(name, 0) == sum(1 for n in _ast_names(node) if n == name)]
+    assert not unreferenced, f"definitions nothing names: {unreferenced}"
 
 
 def _python_nodes(plan: str) -> dict[str, int]:

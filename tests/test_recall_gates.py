@@ -315,7 +315,8 @@ def test_ivf_distributed_training_past_sample_cap(spark, tmp_path_factory):
     np.testing.assert_allclose(np.linalg.norm(C, axis=1), 1.0, atol=1e-9)
     # occupancy bound: max cell holds << n (a capped quantizer collapses
     # cells and the biggest cell grows as n/[capped k])
-    counts = (ivf_assign(emb, C).groupBy("cell").count().toPandas())
+    counts = (ivf_assign(emb, C, m=1).groupBy("cell").count().toPandas())
+    assert counts["count"].sum() == n and counts["cell"].notna().all()
     assert counts["count"].max() <= 8 * n / k, counts["count"].max()
     assert len(counts) >= k // 2, "most cells should be populated"
     # k beyond the corpus size is loud, not a silent cap
@@ -338,11 +339,10 @@ def test_cell_pairs_zero_norm_vector_keeps_the_cell(spark):
     pdf = pd.DataFrame({
         "vec_id": np.arange(6, dtype=np.int64),
         "embedding": [list(map(float, r)) for r in X.astype(np.float32)],
-        "nrm": np.sqrt((X.astype(np.float32).astype(np.float64) ** 2).sum(axis=1)),
         "cell": np.zeros(6, dtype=np.int32),
     })
     assigned = spark.createDataFrame(
-        pdf, "vec_id bigint, embedding array<float>, nrm double, cell int")
+        pdf, "vec_id bigint, embedding array<float>, cell int")
     got = _cell_pairs(assigned, threshold=None, local_top=2).toPandas()
     pairs = {(r.doc_a, r.doc_b): r.cos for r in got.itertuples(index=False)}
     assert pairs[(0, 1)] > 0.99
