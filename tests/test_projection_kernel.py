@@ -3,8 +3,9 @@ embedding x literal-matrix product — LSH sign buckets, IVF cell
 assignment and probing, both quantizer trainers — goes through
 ``_block_dots``. Its dots must not depend on how rows fall into Arrow
 batches, must equal the JVM's sequential-over-dim sum at dim 64, and an
-unreadable embedding (null, wrong width, NaN element) must get a null
-cell or bucket on every path instead of failing or pooling."""
+unreadable embedding (null, NaN or inf element; for IVF also another
+width than the centroids') must get a null cell or bucket on every path
+instead of failing or pooling."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from dup_ocropy_spark.operators.similarity import (
     _block_dots, embedding_neardup_pairs, ivf_assign, ivf_topk_of,
@@ -21,7 +23,9 @@ from dup_ocropy_spark.operators.similarity import (
 SEED = 7
 N = 300
 DIM = 64
-NULL_ID, NARROW_ID, NAN_ID = 3, 150, 151  # 3 is one of the N_QUERIES query rows
+# 3 is one of the N_QUERIES query rows; 51, 154 and 169 hold the three
+# smallest xxhash64(vec_id, 42), so every quantizer sample draws them first
+NULL_ID, NARROW_ID, NAN_ID, INF_ID = 3, 51, 154, 169
 
 
 def _identity(d):
@@ -57,14 +61,15 @@ def test_block_dots_independent_of_batch_split(k):
 
 @pytest.fixture(scope="module")
 def emb(spark, tmp_path_factory):
-    """N vectors with three unreadable rows: a null embedding (a query
-    row), one 63 wide, and one holding a NaN."""
+    """N vectors with four unreadable rows: a null embedding (a query
+    row), one 63 wide, one holding a NaN and one holding an inf."""
     rng = np.random.default_rng(SEED)
     X = rng.standard_normal((N, DIM))
     rows = [list(map(float, r)) for r in X]
     rows[NULL_ID] = None
     rows[NARROW_ID] = rows[NARROW_ID][:-1]
     rows[NAN_ID][5] = float("nan")
+    rows[INF_ID][9] = float("inf")
     d = tmp_path_factory.mktemp("kernel_emb")
     pq.write_table(pa.table({
         "vec_id": pa.array(range(N), pa.int64()),
@@ -89,15 +94,20 @@ def test_cells_and_buckets_do_not_depend_on_batch_size(spark, emb):
     finally:
         spark.conf.set(key, old)
     assert got[0] == got[1] == got[2]
-    assert len(got[0][1]) == (N - 2) * 6  # every readable row, six tables
+    assert len(got[0][1]) == (N - 3) * 6  # every bucketed row, six tables
 
 
 def test_unreadable_embeddings_get_a_null_cell_on_every_path(spark, emb):
-    bad = {NULL_ID, NARROW_ID, NAN_ID}
-    C = ivf_train_centroids(emb)  # the sample holds all three: no raise
+    bad = {NULL_ID, NARROW_ID, NAN_ID, INF_ID}
+    lowest = [r.vec_id for r in emb.orderBy(F.xxhash64("vec_id", F.lit(42)), "vec_id")
+              .where(F.col("vec_id") != NULL_ID).limit(3).collect()]
+    assert set(lowest) == bad - {NULL_ID}  # the draws below meet them first
+    C = ivf_train_centroids(emb)  # the sample holds all four: no raise
     assert np.isfinite(C).all()
-    C_dist = ivf_train_centroids(emb, k=20, sample=8, iters=2)
-    assert C_dist.shape == (20, DIM) and np.isfinite(C_dist).all()
+    C_drv = ivf_train_centroids(emb, k=8, sample=8, iters=2)  # k == sample: driver
+    C_dist = ivf_train_centroids(emb, k=20, sample=8, iters=2)  # k > sample: distributed
+    assert C_drv.shape == (8, DIM) and C_dist.shape == (20, DIM)
+    assert np.isfinite(C_drv).all() and np.isfinite(C_dist).all()
 
     cells = ivf_assign(emb, C, m=2).toPandas()
     assert set(cells["vec_id"]) == set(range(N))  # every row kept
@@ -107,7 +117,7 @@ def test_unreadable_embeddings_get_a_null_cell_on_every_path(spark, emb):
     buckets = lsh_bucket_ids(emb).toPandas()
     assert set(buckets["vec_id"]) == set(range(N))
     # the 63-wide row is bucketed on the planes of its own width
-    assert set(buckets.loc[buckets["bucket"].isna(), "vec_id"]) == {NULL_ID, NAN_ID}
+    assert set(buckets.loc[buckets["bucket"].isna(), "vec_id"]) == bad - {NARROW_ID}
 
     for out in (ivf_topk_of(emb).toPandas(), lsh_topk(emb).toPandas()):
         assert set(out["query_id"]) == {0, 1, 2, 4}
